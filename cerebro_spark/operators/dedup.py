@@ -1050,6 +1050,15 @@ def _query_lsh_root(
     )
 
 
+def _check_jaccard_threshold(threshold: float) -> None:
+    # threshold > 1 would make the prefix length |d| − ⌈t·|d|⌉ + 1 negative
+    # and fail deep inside the Spark job; t <= 0 has no prefix bound at all
+    if not 0 < threshold <= 1:
+        raise ValueError(
+            f"Jaccard threshold must be in (0, 1]; got {threshold!r}"
+        )
+
+
 def prefix_jaccard_pairs(
     df: DataFrame,
     content_col: str = "text",
@@ -1077,14 +1086,16 @@ def prefix_jaccard_pairs(
     ``|∩| / (|a|+|b|−|∩|)`` is a single division of exact integers
     (engine-deterministic, no rounding).
 
-    Plan: one distinct tokenization, two combinable groupBys (df, sizes),
-    one bounded per-doc window for the rarity rank (partitioned BY DOC),
-    posting-list pair explosion over PREFIX postings only, and one
-    re-join on (candidate, token) for verification.
+    Plan: one distinct tokenization, one combinable groupBy for token
+    document frequency, one doc-keyed groupBy that sorts each doc's
+    (df, token) list in-array and slices its prefix, posting-list pair
+    explosion over PREFIX postings only, and one re-join on (candidate,
+    token) for verification.  ``threshold`` must lie in (0, 1].
 
     Reference parity: no reference counterpart — dedup extension family
     (driver brief).
     """
+    _check_jaccard_threshold(threshold)
     tok = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.trim(F.col(content_col)), r"\s+")).alias("w"),
@@ -1222,15 +1233,19 @@ def cross_jaccard_pairs(
     The same 1e-9 downward epsilon as the self-join guards the IEEE
     ceil/length-filter boundaries.
 
-    Plan: tokenize both sides (distinct), ONE combinable groupBy each
-    for sizes + right-side doc freq, per-doc bounded windows for rank,
-    one equi-join of prefix tokens (the candidate join), and one
-    verification re-join on (id, token).  No cross product anywhere.
+    Plan: tokenize both sides (distinct), one combinable groupBy for the
+    right-side doc freq, one doc-keyed groupBy per side that sorts each
+    doc's (df, token) list in-array and slices its prefix, one equi-join
+    of prefix tokens (the candidate join), and one verification re-join
+    on (id, token).  No cross product anywhere.  ``threshold`` must lie
+    in (0, 1].
 
     Reference parity: no reference counterpart — dedup extension family
     (driver brief).
     """
     from cerebro_spark.operators.util import ensure_parallelism
+
+    _check_jaccard_threshold(threshold)
 
     def toks(df: DataFrame, name: str) -> DataFrame:
         # tokenize + explode + the distinct's partial aggregate run on the

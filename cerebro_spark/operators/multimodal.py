@@ -1069,15 +1069,15 @@ def _arrow_byte_segments(arr, S: int, shift: int):
     """Per-row byte-span segment sums/counts for one Arrow string array,
     fully vectorized: (segsum, segcnt) as (n_rows, S) int64 matrices plus
     the null-row mask.  Segment k of a row with n chars covers positions
-    ``[ceil(k*n/S), ceil((k+1)*n/S))`` — the same floor-bucket inverse the
-    JVM expression path and the SQL oracles use.
+    ``[ceil(k*n/S), ceil((k+1)*n/S))`` — the exact inverse of the
+    ``pos*S div n`` floor-bucket rule the SQL oracles use.
 
     Fast path: the UTF-8 data buffer is one contiguous byte run (Arrow
     varchar layout), so ONE cumulative sum over the buffer serves every
     row's 66 segment sums as O(1) subtractions — no per-row Python.  Rows
     containing non-ASCII bytes (where UTF-8 bytes != codepoints, and the
-    JVM path sums ``ascii(char)`` codepoints) are recomputed exactly via
-    an ord() fallback; the gated corpora are pure ASCII so the fallback
+    signal is defined over codepoints) are recomputed exactly via an
+    ord() fallback; the gated corpora are pure ASCII so the fallback
     never runs there.
     """
     import numpy as np
@@ -1140,10 +1140,9 @@ def _byte_hash_map_in_arrow(
     shift: int,
 ) -> DataFrame:
     """Shared mapInArrow driver for the byte-signal hashes: ship only
-    (id, content) across the boundary, return (id, <out_col>).  The JVM
-    expression path computes null-content rows as fingerprint 0 (every
-    gradient/mean comparison is NULL -> the ``otherwise(0)`` branch), so
-    the vectorized path pins the same value.
+    (id, content) across the boundary, return (id, <out_col>).  A NULL
+    content row hashes to fingerprint 0, like an empty one (no segment
+    can set a bit).
 
     No ``ensure_parallelism`` here, deliberately: that guard exists for
     CPU-heavy PER-ROW kernels on under-split inputs, but this kernel is
@@ -1169,7 +1168,7 @@ def _byte_hash_map_in_arrow(
             segsum, segcnt, nulls = _arrow_byte_segments(arr, S, shift)
             fp = fold(segsum, segcnt)
             if nulls is not None:
-                fp[nulls] = 0  # JVM parity: NULL content hashes to 0
+                fp[nulls] = 0  # NULL content hashes to 0
             yield pa.RecordBatch.from_arrays(
                 [ids, pa.array(fp, type=pa.int64())], ["id", out_col]
             )
@@ -1184,20 +1183,27 @@ def byte_dhash_df(
     rows: int = 6,
     cols: int = 11,
     shift: int = 0,
-    impl: str = "arrow",
 ) -> DataFrame:
-    """Dispatcher: the vectorized Arrow kernel (default) or the all-JVM
-    expression formulation (``impl='jvm'``) — bit-identical outputs,
-    pinned by tests/test_round11_opt.py.  The Arrow path computes the 66
-    segment sums as O(1) subtractions on ONE cumulative sum over the
-    batch's contiguous UTF-8 buffer (guide §4.2 shape: Spark distributes,
-    numpy crunches whole batches) — measured ~6x faster than the 66
-    interpreted ``aggregate`` folds at sf0.1; at 100 TB both are narrow
-    shuffle-free maps over the scan, so the constant factor is the whole
-    difference."""
-    if impl == "jvm":
-        return _byte_dhash_expr_df(df, content_col, id_col, rows, cols, shift)
+    """dHash over a document's BYTES as a 1-D signal: segment the byte
+    sequence into ``rows*cols`` equal spans (span of byte ``pos`` is
+    ``pos*S div n`` — the same floor-bucket rule as ``_grid_sums``),
+    reshape row-major to the (rows, cols) grid, then the identical
+    exact-integer gradient bits as ``dhash_from_gray``.  Returns
+    (id, dhash).
 
+    This is the oracle-SQL-expressible twin of ``image_dhash``: the same
+    hash machinery, fed by byte segments instead of decoded pixels, so
+    oracle-gated queries can verify the grid/gradient/packing logic
+    cell-for-cell in DuckDB while ``image_dhash`` (whose decode SQL
+    cannot express) rides the pytest path on real BMPs.  ``shift`` adds a
+    constant to every byte — the brightness-shift knob the planted
+    near-dup queries use (provably hash-invariant, see
+    ``dhash_from_gray``).
+
+    Vectorized Arrow kernel: the 66 segment sums are O(1) subtractions on
+    ONE cumulative sum over the batch's contiguous UTF-8 buffer (guide
+    §4.2 shape: Spark distributes, numpy crunches whole batches).  At
+    100 TB it is a narrow shuffle-free map over the scan."""
     import numpy as np
 
     S = rows * cols
@@ -1219,75 +1225,6 @@ def byte_dhash_df(
     return _byte_hash_map_in_arrow(
         df, content_col, id_col, "dhash", fold, S, shift
     )
-
-
-def _byte_dhash_expr_df(
-    df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    rows: int = 6,
-    cols: int = 11,
-    shift: int = 0,
-) -> DataFrame:
-    """dHash computed JVM-side over a document's BYTES as a 1-D signal:
-    segment the byte sequence into ``rows*cols`` equal spans (span of
-    byte ``pos`` is ``pos*S div n`` — the same floor-bucket rule as
-    ``_grid_sums``), reshape row-major to the (rows, cols) grid, then the
-    identical exact-integer gradient bits as ``dhash_from_gray``.
-
-    This is the oracle-SQL-expressible twin of ``image_dhash``: the same
-    hash machinery, fed by byte segments instead of decoded pixels, so
-    driver-gated queries can verify the grid/gradient/packing logic
-    cell-for-cell in DuckDB while ``image_dhash`` (whose decode SQL
-    cannot express) rides the pytest path on real BMPs.  ``shift`` adds a
-    constant to every byte — the brightness-shift knob the planted
-    near-dup queries use (provably hash-invariant, see
-    ``dhash_from_gray``).
-
-    Returns (id, dhash).  Shape: SHUFFLE-FREE — the whole fingerprint is
-    one per-row expression (66 ``aggregate`` folds over ``slice``s of the
-    split-char array, then the 60 gradient bits), so the pass is a narrow
-    map over the scan with zero exchanges; total per-row work is O(n)
-    (each char is visited by exactly one slice).  Segment k covers
-    positions ``[ceil(k*n/S), ceil((k+1)*n/S))`` — the exact inverse of
-    the ``pos*S div n`` floor-bucket rule the SQL oracle uses (measured
-    2.3x faster than the explode + two-shuffle formulation it replaced,
-    and the better 100 TB shape: nothing leaves the input partitions).
-    All JVM built-ins; no Python in the plan.
-    """
-    from cerebro_spark.operators.util import ensure_parallelism
-
-    S = rows * cols
-    nbits = rows * (cols - 1)
-    assert nbits <= 60, "fingerprint must fit a signed long"
-    df = ensure_parallelism(df)
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.split(F.col(content_col), "").alias("__a"),
-        F.length(content_col).alias("n"),
-    )
-    segsum, segcnt = {}, {}
-    for k in range(S):
-        start = F.expr(f"(n * {k} + {S - 1}) div {S}")
-        end = F.expr(f"(n * {k + 1} + {S - 1}) div {S}")
-        ln = end - start
-        segsum[k] = F.aggregate(
-            F.slice(F.col("__a"), start + 1, ln),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + F.ascii(x) + F.lit(shift),
-        )
-        segcnt[k] = ln.cast("long")
-    fingerprint = None
-    for r in range(rows):
-        for c in range(cols - 1):
-            a, b = r * cols + c, r * cols + c + 1
-            k = r * (cols - 1) + c
-            term = F.when(
-                segsum[b] * segcnt[a] > segsum[a] * segcnt[b],
-                F.lit(1 << k).cast("long"),
-            ).otherwise(F.lit(0).cast("long"))
-            fingerprint = term if fingerprint is None else fingerprint.bitwiseOR(term)
-    return base.select("id", fingerprint.alias("dhash"))
 
 
 def image_ahash_df(
@@ -1341,14 +1278,16 @@ def byte_ahash_df(
     rows: int = 8,
     cols: int = 7,
     shift: int = 0,
-    impl: str = "arrow",
 ) -> DataFrame:
-    """Dispatcher twin of :func:`byte_dhash_df` for the AVERAGE hash:
-    vectorized Arrow kernel by default, the all-JVM expression path under
-    ``impl='jvm'`` — bit-identical (tests/test_round11_opt.py)."""
-    if impl == "jvm":
-        return _byte_ahash_expr_df(df, content_col, id_col, rows, cols, shift)
-
+    """aHash over a document's BYTES as a 1-D signal — the
+    :func:`byte_dhash_df` twin for the AVERAGE hash: segment the byte
+    sequence into ``rows*cols`` equal spans (same floor-bucket rule), one
+    bit per span, set iff the span mean exceeds the GLOBAL mean
+    (cross-multiplied exact integers: ``s_k * N > S * c_k``).  Like dHash,
+    provably invariant under a uniform +k byte shift (both sides gain
+    ``k * c_k * N``), so a brightness twin votes IDENTICALLY — which is
+    what makes (dhash ∧ ahash) a precision gate, not a recall loss.
+    Returns (id, ahash); same vectorized Arrow kernel as the dHash."""
     import numpy as np
 
     S = rows * cols
@@ -1364,59 +1303,6 @@ def byte_ahash_df(
     return _byte_hash_map_in_arrow(
         df, content_col, id_col, "ahash", fold, S, shift
     )
-
-
-def _byte_ahash_expr_df(
-    df: DataFrame,
-    content_col: str = "text",
-    id_col: str = "doc_id",
-    rows: int = 8,
-    cols: int = 7,
-    shift: int = 0,
-) -> DataFrame:
-    """aHash computed JVM-side over a document's BYTES as a 1-D signal —
-    the ``byte_dhash_df`` twin for the AVERAGE hash: segment the byte
-    sequence into ``rows*cols`` equal spans (same floor-bucket rule), one
-    bit per span, set iff the span mean exceeds the GLOBAL mean
-    (cross-multiplied exact integers: ``s_k * N > S * c_k``).  Like dHash,
-    provably invariant under a uniform +k byte shift (both sides gain
-    ``k * c_k * N``), so a brightness twin votes IDENTICALLY — which is
-    what makes (dhash ∧ ahash) a precision gate, not a recall loss.
-
-    Returns (id, ahash).  SHUFFLE-FREE: 56 ``aggregate`` folds over
-    ``slice``s plus one whole-array fold for the global sum — a narrow
-    map over the scan, zero exchanges, no Python."""
-    from cerebro_spark.operators.util import ensure_parallelism
-
-    S = rows * cols
-    assert S <= 60, "fingerprint must fit a signed long"
-    df = ensure_parallelism(df)
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.split(F.col(content_col), "").alias("__a"),
-        F.length(content_col).alias("n"),
-    )
-    total = F.aggregate(
-        F.col("__a"),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + F.ascii(x) + F.lit(shift),
-    )
-    fingerprint = None
-    for k in range(S):
-        start = F.expr(f"(n * {k} + {S - 1}) div {S}")
-        end = F.expr(f"(n * {k + 1} + {S - 1}) div {S}")
-        ln = (end - start).cast("long")
-        segsum = F.aggregate(
-            F.slice(F.col("__a"), start + 1, ln),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + F.ascii(x) + F.lit(shift),
-        )
-        term = F.when(
-            segsum * F.col("n").cast("long") > total * ln,
-            F.lit(1 << k).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        fingerprint = term if fingerprint is None else fingerprint.bitwiseOR(term)
-    return base.select("id", fingerprint.alias("ahash"))
 
 
 def _hash_bands(
@@ -1953,7 +1839,6 @@ def video_signature_df(
     bits: int = 16,
     temporal_bands: int = 3,
     on_error: str = "raise",
-    impl: str = "arrow",
 ) -> DataFrame:
     """The VIDEO fingerprint stage for ``media_neardup_filter_sink`` —
     ``video_signature`` reshaped to the sink's ``(id, dhash)`` contract:
@@ -1968,36 +1853,14 @@ def video_signature_df(
     ``(id, NULL)`` (no frames -> no perceptual identity to probe or
     index).
 
-    Default ``impl='arrow'`` (r11 optimization): every payload's frames
-    are LOCAL to its row, so the decode -> per-frame dHash -> per-span
-    majority fold all happen in ONE Arrow pass with ZERO shuffles — the
-    exploded-frame composition (``impl='dataframe'``: frame-hash frame +
-    count join + two fold groupBys, three exchanges) moved every frame
-    hash across the wire just to group them back by the id they started
-    with.  Bit-identical (exact-integer majority votes; pinned by
-    tests/test_round11_opt.py), and the better 100 TB shape outright.
+    Every payload's frames are LOCAL to its row, so the decode ->
+    per-frame dHash -> per-span majority fold all happen in ONE Arrow pass
+    with ZERO shuffles — no frame hash crosses the wire only to be grouped
+    back by the id it started with.  For every id with
+    at least one frame the signature equals the public composition
+    ``video_signature(video_frame_hash_df(...))`` (exact-integer majority
+    votes; checked by tests/test_round11_opt.py).
     """
-    if impl == "dataframe":
-        fh = video_frame_hash_df(
-            df, payload_col, id_col, every_ms, rows, cols, on_error
-        )
-        good = video_signature(
-            fh.filter(F.col("fhash").isNotNull()),
-            bits=bits,
-            temporal_bands=temporal_bands,
-        )
-        # ids come from the INPUT, not the frame table: a payload that
-        # decodes to ZERO frames emits no frame rows at all, so deriving
-        # ids from fh silently dropped it while the arrow impl emits
-        # (id, NULL) — ADVICE r11.  Ids with >=1 frame or a decode-failure
-        # marker are unchanged (fh ids ⊆ input ids always).
-        return (
-            df.select(F.col(id_col).alias("id"))
-            .distinct()
-            .join(good, "id", "left")
-            .select("id", F.col("vfp").alias("dhash"))
-        )
-
     from cerebro_spark.operators.util import ensure_parallelism
 
     assert on_error in ("raise", "null")

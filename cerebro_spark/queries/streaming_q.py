@@ -41,6 +41,15 @@ from cerebro_spark.io import load_table
 
 _BUCKET = 21600  # 6 h — matches queries/tsdb_q.py's batch ohlc_6h
 
+# State-store width of every replay (VERDICT r11 #6): a streaming query pins
+# its state partition count to ``spark.sql.shuffle.partitions`` at first
+# start, and each stateful operator then pays one delta-file commit PER
+# PARTITION PER BATCH.  The gates' keyspaces are small — (6 h window, type),
+# per-user or per-day state, a few thousand keys at most — so 8 partitions
+# hold them with no parallelism loss while a cluster-wide width only
+# multiplies the commit I/O.
+_STATE_PARTITIONS = 8
+
 
 def _events_as_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → canonical point frame (measurement/fields/time) with the
@@ -61,7 +70,6 @@ def _run_available_now(
     output_mode: str = "complete",
     ordered_single_batch: bool = False,
     order_col: str = "ts",
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Replay a batch point frame through a streaming twin: spool to
     parquet, readStream it, run ``twin`` on the stream, collect the
@@ -75,17 +83,10 @@ def _run_available_now(
     a property of the equivalence HARNESS, not of the operators: on a live
     stream the watermark bounds disorder instead.
 
-    ``state_partitions`` sizes the twin's STATE STORE at query build time
-    (VERDICT r11 #6): a streaming query pins its state partition count to
-    ``spark.sql.shuffle.partitions`` at first start, and every stateful
-    operator then pays one delta-file commit PER PARTITION PER BATCH — a
-    fixed I/O floor that should track the query's KEYSPACE, not the
-    cluster width (a 32-way state store for a few thousand keys is 4× the
-    commit fan-out of an 8-way one for zero parallelism gain; a 100 TB
-    deployment with millions of keys passes a large value or None to
-    inherit cluster sizing).  Scoped to this query: the session conf is
-    restored after termination, and each gate replays into a fresh
-    checkpoint so the pinned count never conflicts with prior state."""
+    The twin's state store is sized to ``_STATE_PARTITIONS`` at query
+    build time.  Scoped to this query: the session conf is restored after
+    termination, and each gate replays into a fresh checkpoint so the
+    pinned count never conflicts with prior state."""
     spark = points_df.sparkSession
     name = f"stream_gate_{uuid.uuid4().hex[:12]}"
     tmp = tempfile.mkdtemp(prefix=name)
@@ -98,10 +99,9 @@ def _run_available_now(
         )
         writer.write.mode("overwrite").parquet(f"{tmp}/in")
         stream = spark.readStream.schema(points_df.schema).parquet(f"{tmp}/in")
-        if state_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(state_partitions)
-            )
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(_STATE_PARTITIONS)
+        )
         q = (
             twin(stream)
             .writeStream.format("memory")
@@ -113,8 +113,7 @@ def _run_available_now(
         )
         q.awaitTermination(600)
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         shutil.rmtree(tmp, ignore_errors=True)
     return spark.table(name)
 
@@ -122,15 +121,12 @@ def _run_available_now(
 def q_streaming_ohlc_6h(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cerebro_spark.streaming.stateful import streaming_ohlc
 
-    # state_partitions=8: state keys are (6h window, type) — dozens
-    # live at once; commit fan-out, not parallelism, is the floor here
     out = _run_available_now(
         _events_as_points(spark, sf_dir),
         lambda s: streaming_ohlc(
             s, window="6 hours", watermark="10 minutes",
             tiebreak_field="event_id",
         ),
-        state_partitions=8,
     )
     return out.select(
         F.col("window_start").alias("bucket_ts"),
@@ -160,13 +156,11 @@ def q_streaming_percentiles_check(spark: SparkSession, sf_dir: str) -> DataFrame
     from cerebro_spark.streaming.stateful import streaming_percentiles
 
     accuracy = 1000
-    # state_partitions=8: same (window, type) keyspace as the OHLC gate
     streamed = _run_available_now(
         _events_as_points(spark, sf_dir),
         lambda s: streaming_percentiles(
             s, window="6 hours", watermark="10 minutes", accuracy=accuracy
         ),
-        state_partitions=8,
     )
     batch = (
         _events_as_points(spark, sf_dir)
@@ -227,13 +221,11 @@ def q_streaming_sessionize_closed(spark: SparkSession, sf_dir: str) -> DataFrame
     from cerebro_spark.streaming.stateful import streaming_sessionize
 
     ev = load_table(spark, "events", sf_dir).select("user_id", "ts", "value")
-    # state_partitions=8: per-user session state, thousands of keys
     out = _run_available_now(
         ev,
         lambda s: streaming_sessionize(
             s, gap_seconds=1800, emit_on_timeout=False
         ),
-        state_partitions=8,
         output_mode="append",
         ordered_single_batch=True,
     )
@@ -292,14 +284,12 @@ def q_streaming_cusum_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = slack_sigmas * sigma
     h = alert_sigmas * sigma
 
-    # state_partitions=8: one float of state per user key
     streamed = _run_available_now(
         ev,
         lambda s: streaming_cusum(
             s, mu=mu, sigma=sigma, key_col="user_id",
             slack_sigmas=slack_sigmas, alert_sigmas=alert_sigmas,
         ),
-        state_partitions=8,
         output_mode="append",
         ordered_single_batch=True,
     ).select(
@@ -356,13 +346,11 @@ def q_streaming_dedup_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "ts", "value"
     )
     doubled = ev.unionAll(ev)
-    # state_partitions=8: dedup state is one marker per event key
     out = _run_available_now(
         doubled,
         lambda s: streaming_dedup(
             s, key_cols=["event_id"], time_col="ts"
         ),
-        state_partitions=8,
         output_mode="append",
         ordered_single_batch=True,
     )
@@ -447,10 +435,8 @@ def q_streaming_join_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("gap_us"),
         )
 
-    # state_partitions=8: stream-stream join, user-keyed bounded state
     return _run_available_now(
         ev, twin, output_mode="append", ordered_single_batch=True,
-        state_partitions=8,
     )
 
 
@@ -547,10 +533,8 @@ def q_streaming_outer_join_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("click_id"),
         )
 
-    # state_partitions=8: stream-stream outer join, user-keyed state
     out = _run_available_now(
         src, twin, output_mode="append", ordered_single_batch=True,
-        state_partitions=8,
     ).filter(F.col("purchase_id") >= 0)  # drop the sentinel purchase
     # aggregate to per-purchase counts: outer-join row order/duplication is
     # engine-internal, the per-purchase contract is not
@@ -596,13 +580,11 @@ def q_streaming_deadband_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     delta = 50.0
     ev = load_table(spark, "events", sf_dir).select("user_id", "ts", "value")
-    # state_partitions=8: one float of state per user key
     streamed = _run_available_now(
         ev,
         lambda s: streaming_deadband(s, key_col="user_id", delta=delta),
         output_mode="append",
         ordered_single_batch=True,
-        state_partitions=8,
     )
     per_key = streamed.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("kept"),
@@ -685,15 +667,8 @@ def q_streaming_enrich_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("staleness_us"),
         )
 
-    # state_partitions: the stream-stream join keeps FOUR state stores per
-    # partition (keyToNumValues/keyWithIndexToValue × both sides), so the
-    # per-batch commit fan-out is 4× the partition count; the gate's
-    # keyspace (distinct user_id) is a few thousand rows of state — 8
-    # partitions hold it comfortably, 32 only multiplied the commit I/O
-    # (a live deployment with a wide keyspace passes None/large)
     return _run_available_now(
         ev, twin, output_mode="append", ordered_single_batch=True,
-        state_partitions=8,
     )
 
 
@@ -733,13 +708,11 @@ def q_streaming_msprt_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("q"),
     )
-    # state_partitions=8: six integer moments per day key (~30 keys)
     streamed = _run_available_now(
         points,
         lambda s: streaming_msprt(s, arm_a=0, arm_b=1),
         output_mode="append",
         ordered_single_batch=True,
-        state_partitions=8,
     )
 
     daily = points.groupBy("day").agg(
@@ -870,10 +843,8 @@ def q_streaming_cms_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ts"),
         )
     )
-    # state_partitions=8: CMS state is depth×width counters, key-bounded
     out = _run_available_now(
         keys, lambda s: count_min_sketch(s, "w", depth=4, width=256),
-        state_partitions=8,
     )
     return out.select("row", "bucket", "c").orderBy("row", "bucket")
 
@@ -914,13 +885,11 @@ def q_streaming_distinct_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch itself is not DuckDB-reproducible)."""
     from cerebro_spark.streaming.stateful import streaming_distinct
 
-    # state_partitions=8: one HLL sketch per (window, type) key
     streamed = _run_available_now(
         _events_as_points(spark, sf_dir),
         lambda s: streaming_distinct(
             s, window="6 hours", watermark="10 minutes", rsd=0.02
         ),
-        state_partitions=8,
     )
     v = F.element_at(F.col("fields"), F.lit("value"))
     batch = (

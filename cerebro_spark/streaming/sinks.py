@@ -450,8 +450,6 @@ def neardup_filter_sink(
     rows = num_hashes // bands
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         from pyspark.sql import Window
 
         from cerebro_spark.operators.util import (
@@ -460,18 +458,6 @@ def neardup_filter_sink(
         )
 
         spark = batch_df.sparkSession
-        # LOUD failure for a half-finished compaction swap: if the index
-        # directory is gone but the pre-swap copy survives, starting fresh
-        # here would silently lose dedup against the whole historical
-        # corpus (the bare except below would read it as "first batch").
-        if not os.path.exists(index_path) and os.path.exists(
-            f"{index_path}.old"
-        ):
-            raise RuntimeError(
-                f"{index_path} missing but {index_path}.old exists — a "
-                "compact_neardup_index swap crashed mid-rename; restore "
-                f"with: mv {index_path}.old {index_path}"
-            )
         # resolve the generation ONCE: probe, ct check, and appends all use
         # one consistent root even if the online compactor flips mid-batch
         # (the post-append migration loop below handles the flip)
@@ -620,88 +606,6 @@ def neardup_filter_sink(
     return write
 
 
-def compact_neardup_index(
-    spark,
-    index_path: str,
-    out_path: str | None = None,
-    target_files: int = 8,
-):
-    """Compact a ``neardup_filter_sink``-owned LSH index: thousands of
-    per-batch ``__batch=N`` directories (one small file each) become one
-    consolidated ``__batch=0`` generation — same read schema, same probe
-    results, bounded file count.  The ops companion to ``io.compact_store``
-    for the index layout.
-
-    Writes a full new index tree and swaps it in with directory renames
-    (``<path>.old`` is kept until the swap completes, then removed) — run
-    it from the maintenance window, AFTER the ingest stream has stopped
-    with its last batch checkpoint-committed; the swap is not atomic for
-    a reader that opens mid-rename.  LOCAL filesystem paths only (POSIX
-    renames) — on an object store pass ``out_path`` and flip your own
-    pointer.  Crash safety: if the process dies between the two renames,
-    the sink refuses to start and names the ``<path>.old`` restore; a
-    replay of an already-folded batch after restart is skipped via the
-    persisted ``compacted_through`` marker.  Signatures/buckets are
-    deduplicated on fold, so a pre-compaction replay duplicate heals
-    here.  ``target_files`` bounds the consolidated signature file count
-    without funneling the whole set through one task."""
-    import os as _os
-    import re
-    import shutil
-
-    from cerebro_spark.operators.util import read_index_generation
-
-    if read_index_generation(index_path) is not None:
-        raise ValueError(
-            f"{index_path} uses the generation-pointer layout — use "
-            "compact_neardup_index_online (this legacy swap assumes the "
-            "flat layout and a stopped stream)"
-        )
-    sig = (
-        spark.read.parquet(f"{index_path}/signatures")
-        .drop("__batch")
-        .dropDuplicates(["id"])
-    )
-    buckets = (
-        spark.read.parquet(f"{index_path}/buckets")
-        .drop("__batch")
-        .dropDuplicates(["id", "band", "bucket"])
-    )
-    params = spark.read.parquet(f"{index_path}/params")
-    n_bands = int(params.collect()[0]["bands"])
-    max_batch = max(
-        (
-            int(m.group(1))
-            for d in _os.listdir(f"{index_path}/signatures")
-            for m in [re.match(r"__batch=(\d+)$", d)]
-            if m
-        ),
-        default=0,
-    )
-
-    target = out_path or f"{index_path}.compact-tmp"
-    shutil.rmtree(target, ignore_errors=True)
-    sig.repartition(target_files).write.mode("overwrite").parquet(
-        f"{target}/signatures/__batch=0"
-    )
-    (
-        buckets.repartition(n_bands, "band")
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(f"{target}/buckets/__batch=0")
-    )
-    params.coalesce(1).write.mode("overwrite").parquet(f"{target}/params")
-    small_df(
-        spark, [(max_batch,)], "through_batch long"
-    ).write.mode("overwrite").parquet(f"{target}/compacted_through")
-    if out_path is None:
-        old = f"{index_path}.old"
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.move(index_path, old)
-        shutil.move(target, index_path)
-        shutil.rmtree(old)
-
-
 def media_neardup_filter_sink(
     index_path: str,
     out_path: str,
@@ -778,8 +682,6 @@ def media_neardup_filter_sink(
             return byte_dhash_df(d, content_col=content_col, id_col=id_col)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         from pyspark.sql import Window
 
         spark = batch_df.sparkSession
@@ -788,17 +690,6 @@ def media_neardup_filter_sink(
             write_batch_dir,
         )
 
-        # half-finished compaction swap: refuse loudly with the restore
-        # path rather than silently starting a fresh index (the
-        # neardup_filter_sink lesson)
-        if not os.path.exists(index_path) and os.path.exists(
-            f"{index_path}.old"
-        ):
-            raise RuntimeError(
-                f"{index_path} missing but {index_path}.old exists — a "
-                "compact_media_index swap crashed mid-rename; restore "
-                f"with: mv {index_path}.old {index_path}"
-            )
         # resolve the generation ONCE per batch: ct check, probe, and
         # appends use one consistent root; the post-append migration loop
         # handles an online compactor flipping mid-batch
@@ -955,86 +846,6 @@ def media_neardup_filter_sink(
             _clear_inflight(index_path, batch_id)
 
     return write
-
-
-def compact_media_index(
-    spark,
-    index_path: str,
-    out_path: str | None = None,
-    target_files: int = 8,
-):
-    """Compact a ``media_neardup_filter_sink``-owned Hamming index: many
-    per-batch ``__batch=N`` directories (one small file each) collapse into
-    one consolidated ``__batch=0`` generation — same probe results, bounded
-    file count.  The media twin of ``compact_neardup_index``; the same
-    swap/crash contract applies (run from the maintenance window after the
-    stream stops; ``<path>.old`` names the restore if the rename pair is
-    interrupted; POSIX-rename local paths only, pass ``out_path`` on an
-    object store).
-
-    One subtlety the text twin handles more loosely: the media sink's
-    replay guard probes ``__batch < N``, and folding collapses history
-    into batch id 0 — so a post-compaction replay of an already-folded
-    batch N would see its OWN fingerprints (0 < N) and wrongly drop its
-    docs.  The sink therefore honors the ``compacted_through`` marker
-    written here as a FULL no-op (skip probe, output, and growth): a
-    folded batch is by contract checkpoint-committed, so its output
-    directory already holds the correct survivors."""
-    import os as _os
-    import re
-    import shutil
-
-    from cerebro_spark.operators.util import read_index_generation
-
-    if read_index_generation(index_path) is not None:
-        raise ValueError(
-            f"{index_path} uses the generation-pointer layout — use "
-            "compact_media_index_online (this legacy swap assumes the "
-            "flat layout and a stopped stream)"
-        )
-    fps = (
-        spark.read.parquet(f"{index_path}/fps")
-        .drop("__batch")
-        .dropDuplicates(["id"])
-    )
-    bands = (
-        spark.read.parquet(f"{index_path}/bands")
-        .drop("__batch")
-        .dropDuplicates(["id", "blk", "seg"])
-    )
-    params = spark.read.parquet(f"{index_path}/params")
-    n_blocks = int(params.collect()[0]["blocks"])
-    max_batch = max(
-        (
-            int(m.group(1))
-            for d in _os.listdir(f"{index_path}/bands")
-            for m in [re.match(r"__batch=(\d+)$", d)]
-            if m
-        ),
-        default=0,
-    )
-
-    target = out_path or f"{index_path}.compact-tmp"
-    shutil.rmtree(target, ignore_errors=True)
-    fps.repartition(target_files).write.mode("overwrite").parquet(
-        f"{target}/fps/__batch=0"
-    )
-    (
-        bands.repartition(n_blocks, "blk")
-        .write.mode("overwrite")
-        .partitionBy("blk")
-        .parquet(f"{target}/bands/__batch=0")
-    )
-    params.coalesce(1).write.mode("overwrite").parquet(f"{target}/params")
-    small_df(
-        spark, [(max_batch,)], "through_batch long"
-    ).write.mode("overwrite").parquet(f"{target}/compacted_through")
-    if out_path is None:
-        old = f"{index_path}.old"
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.move(index_path, old)
-        shutil.move(target, index_path)
-        shutil.rmtree(old)
 
 
 # ---------------------------------------------------------------------------
@@ -1214,8 +1025,7 @@ def compact_neardup_index_online(
 ):
     """ONLINE compaction for a ``neardup_filter_sink`` index: fold every
     per-batch directory into one consolidated generation and flip the
-    ``GENERATION`` pointer — the stream KEEPS RUNNING (the stop-the-world
-    rename swap of ``compact_neardup_index`` is the legacy path).  Probe
+    ``GENERATION`` pointer — the stream KEEPS RUNNING.  Probe
     results are unchanged: readers resolve the pointer per operation, the
     fold preserves the fact set (deduplicated), and the three-case
     argument in ``_compact_index_online`` shows no concurrent batch can be

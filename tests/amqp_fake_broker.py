@@ -225,6 +225,10 @@ class FakeBroker(threading.Thread):
                     # acks free prefetch window -> push more (RabbitMQ flow)
                     self._push_ready(conn, channel)
             elif cm == CONNECTION_CLOSE:
+                # requeue BEFORE Close-Ok, as a real broker has released the
+                # session's deliveries once the client sees the close
+                # complete; requeueing after it raced the client's return
+                self._requeue_unacked()
                 self._send_method(conn, 0, CONNECTION_CLOSE_OK)
                 return
             else:

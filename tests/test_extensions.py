@@ -600,3 +600,20 @@ def test_prefix_jaccard_ieee_uprounding_boundary(spark):
     b = " ".join(f"w{i}" for i in range(7))  # contained: inter=7, union=25
     got = _prefix_pairs(spark, [(1, a), (2, b)], 0.28)
     assert set(got) == {(1, 2)} and abs(got[(1, 2)] - 0.28) < 1e-15
+
+
+@pytest.mark.parametrize("t", [1.5, 1.0000001, 0, -0.2])
+def test_jaccard_pairs_reject_threshold_outside_unit_interval(spark, t):
+    """Both prefix-filtered joins validate ``0 < threshold <= 1`` at entry:
+    t > 1 would otherwise slice a negative prefix length deep inside the
+    Spark job, and t <= 0 has no prefix bound."""
+    from cerebro_spark.operators.dedup import (
+        cross_jaccard_pairs,
+        prefix_jaccard_pairs,
+    )
+
+    df = spark.createDataFrame([(1, "a b"), (2, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="threshold"):
+        prefix_jaccard_pairs(df, threshold=t)
+    with pytest.raises(ValueError, match="threshold"):
+        cross_jaccard_pairs(df, df, threshold=t)

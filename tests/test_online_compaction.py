@@ -1,10 +1,10 @@
 """Online (generation-pointer) index compaction: the stream keeps running.
 
-The r10 verdict's design-debt item: the legacy ``compact_*_index`` rename
-swap requires a maintenance window.  The online variant folds the current
-generation into ``g=N+1``, flips the ``GENERATION`` pointer atomically,
-waits for in-flight batches, and reconciles late arrivals — probe results
-must be unchanged and no concurrent batch may be lost."""
+The compactor folds the current generation into ``g=N+1``, flips the
+``GENERATION`` pointer atomically, waits for in-flight batches, and
+reconciles late arrivals — probe results must be unchanged, the folded
+generation must hold fewer files, a folded batch's replay must be a
+no-op, and no concurrent batch may be lost."""
 
 import hashlib
 import threading
@@ -35,18 +35,26 @@ def _tdoc(seed: int, n: int = 30) -> str:
     return " ".join(f"tok{(seed * 31 + j * 7) % 997}x{j}" for j in range(n))
 
 
+def _n_parquet_files(path: str) -> int:
+    import os
+
+    return sum(
+        1 for _, _, names in os.walk(path)
+        for f in names if f.endswith(".parquet")
+    )
+
+
 @pytest.mark.slow
 def test_media_online_compaction_between_batches(spark, tmp_path):
-    """Fold + flip between micro-batches: probe results unchanged, folded
-    replay is a no-op, the next new batch still dedups, and the legacy
-    compactor refuses the new layout."""
+    """Fold + flip between micro-batches: probe results unchanged, the
+    pruned index holds fewer files, folded replay is a no-op, and the next
+    new batch still dedups."""
     import os
 
     from cerebro_spark.operators.multimodal import (
         byte_dhash_df,
         query_hamming_index,
     )
-    from cerebro_spark.streaming.sinks import compact_media_index
 
     index = str(tmp_path / "index")
     out = str(tmp_path / "out")
@@ -77,9 +85,12 @@ def test_media_online_compaction_between_batches(spark, tmp_path):
 
     before = hits()
     assert before == [(99, 11)]
-    gen = compact_media_index_online(spark, index)
+    before_files = _n_parquet_files(index)
+    gen = compact_media_index_online(spark, index, prune_old=True)
     assert gen == 1
     assert os.path.isdir(f"{index}/g=1/bands/__batch=0")
+    assert not os.path.isdir(f"{index}/bands")  # flat per-batch tree pruned
+    assert _n_parquet_files(index) < before_files
     assert hits() == before  # probe resolves the pointer, results unchanged
     # replay of a folded batch: full no-op
     sink(
@@ -102,9 +113,6 @@ def test_media_online_compaction_between_batches(spark, tmp_path):
     )
     kept = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert 77 not in kept and 78 in kept
-    # legacy stop-the-world compactor refuses the generation layout
-    with pytest.raises(ValueError, match="generation"):
-        compact_media_index(spark, index)
     # a SECOND online fold (g=1 -> g=2) absorbs the post-flip batch too
     gen = compact_media_index_online(spark, index)
     assert gen == 2
@@ -170,7 +178,8 @@ def test_media_online_compaction_concurrent_with_stream(spark, tmp_path):
 @pytest.mark.slow
 def test_text_online_compaction_and_prune(spark, tmp_path):
     """The text sink twin: fold + flip with the stream running across the
-    flip, probe equality, and prune removes the old generation."""
+    flip, probe equality, the folded generation holds fewer files than the
+    per-batch tree, and prune removes the old generation."""
     import os
 
     from cerebro_spark.operators.dedup import query_lsh_index
@@ -204,8 +213,10 @@ def test_text_online_compaction_and_prune(spark, tmp_path):
 
     before = hits()
     assert before == [(99, 11)]
+    before_files = _n_parquet_files(index)
     gen = compact_neardup_index_online(spark, index)
     assert gen == 1
+    assert _n_parquet_files(f"{index}/g=1") < before_files
     assert hits() == before
     # stream keeps going after the flip; near-dup of folded doc 2 drops
     sink(
@@ -231,6 +242,7 @@ def test_text_online_compaction_and_prune(spark, tmp_path):
     assert any(p.endswith("signatures") for p in removed)
     assert hits() == before
     assert not os.path.isdir(f"{index}/buckets")
+    assert _n_parquet_files(index) == _n_parquet_files(f"{index}/g=1")
 
 
 def test_atomic_batch_publish_skips_existing(spark, tmp_path):

@@ -546,24 +546,12 @@ def test_fuzzy_join_blocked_matches_bruteforce(spark, rows, d):
 
 # -- triangle participation == brute force on random graphs ------------------
 
-@settings(**SETTINGS)
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 9), st.integers(0, 9)),
-        min_size=1,
-        max_size=30,
-    )
-)
-def test_triangle_participation_matches_bruteforce(spark, raw_edges):
+
+def _triangles_bruteforce(raw_edges) -> dict:
+    """Every node triple checked against the undirected simple edge set
+    (self-loops dropped, duplicate and reversed edges merged)."""
     from itertools import combinations
 
-    from cerebro_spark.operators.cluster import triangle_participation
-
-    df = spark.createDataFrame(raw_edges, "src long, dst long")
-    got = {
-        r["node"]: r["triangles"]
-        for r in triangle_participation(df).collect()
-    }
     undirected = {
         (min(u, v), max(u, v)) for u, v in raw_edges if u != v
     }
@@ -577,7 +565,67 @@ def test_triangle_participation_matches_bruteforce(spark, raw_edges):
         ):
             for x in (a, b, c):
                 ref[x] = ref.get(x, 0) + 1
-    assert got == ref
+    return ref
+
+
+@settings(**SETTINGS)
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 9), st.integers(0, 9)),
+        min_size=1,
+        max_size=30,
+    )
+)
+def test_triangle_participation_matches_bruteforce(spark, raw_edges):
+    from cerebro_spark.operators.cluster import triangle_participation
+
+    df = spark.createDataFrame(raw_edges, "src long, dst long")
+    got = {
+        r["node"]: r["triangles"]
+        for r in triangle_participation(df).collect()
+    }
+    assert got == _triangles_bruteforce(raw_edges)
+
+
+@st.composite
+def _adversarial_graph(draw):
+    """Stars (one hub, many leaves: the degree-skew the orientation must
+    bound), cliques (every triple a triangle), self-loops, and every edge
+    possibly duplicated or reversed, over a small shared node range so
+    the shapes overlap."""
+    edges = []
+    for _ in range(draw(st.integers(0, 2))):  # stars
+        hub = draw(st.integers(0, 14))
+        leaves = draw(st.lists(st.integers(0, 14), max_size=10))
+        edges += [(hub, x) for x in leaves]
+    for _ in range(draw(st.integers(0, 2))):  # cliques
+        members = draw(st.sets(st.integers(0, 14), min_size=3, max_size=6))
+        edges += [(u, v) for u in members for v in members if u < v]
+    edges += [(u, u) for u in draw(st.lists(st.integers(0, 14), max_size=3))]
+    edges += draw(
+        st.lists(st.tuples(st.integers(0, 14), st.integers(0, 14)), max_size=8)
+    )
+    out = []
+    for u, v in edges:
+        if draw(st.booleans()):
+            u, v = v, u
+        out += [(u, v)] * draw(st.integers(1, 2))
+    return out
+
+
+@settings(**SETTINGS)
+@given(_adversarial_graph())
+def test_triangle_participation_adversarial_shapes(spark, raw_edges):
+    """Stars, cliques, self-loops, duplicate and reversed edges: the
+    adjacency-intersection count equals ``_triangles_bruteforce``."""
+    from cerebro_spark.operators.cluster import triangle_participation
+
+    df = spark.createDataFrame(raw_edges, "src long, dst long")
+    got = {
+        r["node"]: r["triangles"]
+        for r in triangle_participation(df).collect()
+    }
+    assert got == _triangles_bruteforce(raw_edges)
 
 
 # -- window_funnel vs a Python reference of the anchored-greedy semantics ----

@@ -1,7 +1,8 @@
 """Round-11 optimization pins: the vectorized Arrow byte-hash kernels must
-be bit-identical to the all-JVM expression formulation they replaced as the
-default (the oracle gates run through the default path, so any divergence
-here is a driver-gate break, not a perf detail)."""
+be bit-identical to a pure-Python floor-bucket segment reference, and the
+one-pass video signature to the public frame-hash composition (the oracle
+gates run through these kernels, so any divergence here is an oracle-gate
+break, not a perf detail)."""
 
 from __future__ import annotations
 
@@ -27,19 +28,58 @@ def edge_df(spark):
     return spark.createDataFrame(EDGE_ROWS, "doc_id long, text string")
 
 
-@pytest.mark.parametrize("shift", [0, 2])
-def test_byte_dhash_arrow_matches_jvm(spark, edge_df, shift):
-    jvm = {r.id: r.dhash for r in byte_dhash_df(edge_df, shift=shift, impl="jvm").collect()}
-    arw = {r.id: r.dhash for r in byte_dhash_df(edge_df, shift=shift, impl="arrow").collect()}
-    assert jvm == arw
-    assert set(jvm) == {r[0] for r in EDGE_ROWS}
+def _segments(text, S, shift):
+    """Floor-bucket segments of a text's codepoint signal: position ``pos``
+    of an n-char text lands in segment ``pos*S // n``.  Returns per-segment
+    (sum of codepoint + shift, count) lists."""
+    segsum, segcnt = [0] * S, [0] * S
+    n = len(text)
+    for pos, ch in enumerate(text):
+        k = pos * S // n
+        segsum[k] += ord(ch) + shift
+        segcnt[k] += 1
+    return segsum, segcnt
+
+
+def ref_byte_dhash(text, rows=6, cols=11, shift=0):
+    """Pure-Python dHash of the byte signal: bit r*(cols-1)+c is set iff
+    the mean of segment r*cols+c+1 exceeds the mean of segment r*cols+c
+    (cross-multiplied exact integers).  NULL content hashes to 0."""
+    if text is None:
+        return 0
+    s, c = _segments(text, rows * cols, shift)
+    h = 0
+    for r in range(rows):
+        for col in range(cols - 1):
+            a, b = r * cols + col, r * cols + col + 1
+            if s[b] * c[a] > s[a] * c[b]:
+                h |= 1 << (r * (cols - 1) + col)
+    return h
+
+
+def ref_byte_ahash(text, rows=8, cols=7, shift=0):
+    """Pure-Python aHash of the byte signal: bit k is set iff segment k's
+    mean exceeds the whole text's mean.  NULL content hashes to 0."""
+    if text is None:
+        return 0
+    s, c = _segments(text, rows * cols, shift)
+    total, n = sum(s), len(text)
+    return sum(1 << k for k in range(rows * cols) if s[k] * n > total * c[k])
 
 
 @pytest.mark.parametrize("shift", [0, 2])
-def test_byte_ahash_arrow_matches_jvm(spark, edge_df, shift):
-    jvm = {r.id: r.ahash for r in byte_ahash_df(edge_df, shift=shift, impl="jvm").collect()}
-    arw = {r.id: r.ahash for r in byte_ahash_df(edge_df, shift=shift, impl="arrow").collect()}
-    assert jvm == arw
+def test_byte_dhash_matches_python_reference(spark, edge_df, shift):
+    """Kernel vs ``ref_byte_dhash`` on the edge rows (empty, NULL,
+    non-ASCII, single char, long repeats)."""
+    got = {r.id: r.dhash for r in byte_dhash_df(edge_df, shift=shift).collect()}
+    assert got == {i: ref_byte_dhash(t, shift=shift) for i, t in EDGE_ROWS}
+
+
+@pytest.mark.parametrize("shift", [0, 2])
+def test_byte_ahash_matches_python_reference(spark, edge_df, shift):
+    """Kernel vs ``ref_byte_ahash`` on the edge rows."""
+    got = {r.id: r.ahash for r in byte_ahash_df(edge_df, shift=shift).collect()}
+    assert got == {i: ref_byte_ahash(t, shift=shift) for i, t in EDGE_ROWS}
 
 
 def test_dhash_stack_matches_scalar():
@@ -92,10 +132,14 @@ def test_avi_vectorized_encode_decode_roundtrip_bytes():
 
 def test_video_signature_arrow_matches_dataframe_composition(spark):
     """The one-pass Arrow video signature must be bit-identical to the
-    exploded-frame DataFrame composition (3 shuffles) it replaces —
-    including NULL payloads, corrupt payloads, and zero-frame payloads."""
+    public composition ``video_signature(video_frame_hash_df(...))`` for
+    every id with frames; NULL and corrupt payloads yield (id, NULL)."""
     from cerebro_spark.io import load_table
-    from cerebro_spark.operators.multimodal import video_signature_df
+    from cerebro_spark.operators.multimodal import (
+        video_frame_hash_df,
+        video_signature,
+        video_signature_df,
+    )
     from cerebro_spark.queries.multimodal_q import _synth_avi
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001").select(
@@ -111,9 +155,18 @@ def test_video_signature_arrow_matches_dataframe_composition(spark):
     )
     fast = {r.id: r.dhash for r in video_signature_df(
         planted, every_ms=500, on_error="null").collect()}
-    slow = {r.id: r.dhash for r in video_signature_df(
-        planted, every_ms=500, on_error="null", impl="dataframe").collect()}
-    assert fast == slow and len(fast) == 500
+    frames = video_frame_hash_df(planted, every_ms=500, on_error="null")
+    ref = {
+        r.id: r.vfp
+        for r in video_signature(
+            frames.filter(F.col("fhash").isNotNull())
+        ).collect()
+    }
+    assert len(fast) == 500 and ref
+    assert {i: h for i, h in fast.items() if i in ref} == ref
+    # every id without frames (NULL or corrupt payload) is (id, NULL)
+    assert all(fast[i] is None for i in set(fast) - set(ref))
+    assert all(i % 11 in (0, 5) for i in set(fast) - set(ref))
 
 
 def test_mmr_driver_greedy_matches_distributed_loop(spark):
@@ -140,9 +193,10 @@ def test_mmr_driver_greedy_matches_distributed_loop(spark):
     assert fast == slow and len(fast) == 50
 
 
-def test_byte_dhash_arrow_matches_jvm_on_corpus(spark):
-    """Whole-corpus agreement at sf0.001 including the +2-shift variant
-    corpus (the shape every gated dhash query feeds the kernel)."""
+def test_byte_dhash_matches_python_reference_on_corpus(spark):
+    """Whole-corpus agreement with ``ref_byte_dhash`` at sf0.001, including
+    the +2-shift variant corpus (the shape every gated dhash query feeds
+    the kernel)."""
     from cerebro_spark.io import load_table
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001").select(
@@ -156,6 +210,6 @@ def test_byte_dhash_arrow_matches_jvm_on_corpus(spark):
             F.translate("text", sf, st).alias("text"),
         )
     )
-    jvm = {r.id: r.dhash for r in byte_dhash_df(corpus, impl="jvm").collect()}
-    arw = {r.id: r.dhash for r in byte_dhash_df(corpus, impl="arrow").collect()}
-    assert jvm == arw and len(jvm) == 1000
+    got = {r.id: r.dhash for r in byte_dhash_df(corpus).collect()}
+    ref = {r.doc_id: ref_byte_dhash(r.text) for r in corpus.collect()}
+    assert got == ref and len(got) == 1000

@@ -383,3 +383,48 @@ def test_native_streaming_session_window(spark, tmp_path):
         "ORDER BY session_window.start"
     ).collect()
     assert [r["n"] for r in out] == [4, 3]
+
+
+def test_streaming_gate_state_store_width_and_conf_restore(spark, sf_dir):
+    """The streaming gates size every replay's state store to
+    ``_STATE_PARTITIONS`` (8) whatever the session's shuffle width, and
+    restore the session conf afterwards — shown on ``streaming_ohlc_6h``
+    through its ``stateOperators[0].numShufflePartitions`` progress."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from cerebro_spark.queries.streaming_q import q_streaming_ohlc_6h
+
+    widths: list = []
+
+    class Widths(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            ops = event.progress.stateOperators
+            if ops:
+                widths.append(ops[0].numShufflePartitions)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    listener = Widths()
+    spark.streams.addListener(listener)
+    try:
+        spark.conf.set(key, "3")
+        q_streaming_ohlc_6h(spark, sf_dir)
+        assert spark.conf.get(key) == "3"
+        deadline = time.time() + 30  # listener events arrive asynchronously
+        while not widths and time.time() < deadline:
+            time.sleep(0.2)
+        assert widths and set(widths) == {8}
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, saved)

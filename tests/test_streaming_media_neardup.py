@@ -173,80 +173,6 @@ def test_media_sink_param_mismatch_refuses(spark, tmp_path):
         media_neardup_filter_sink(index, out, max_hamming=4, blocks=4)
 
 
-@pytest.mark.slow
-def test_compact_media_index_preserves_probes_and_replay(spark, tmp_path):
-    """Compaction collapses per-batch directories into one generation with
-    identical probe results; a replay of an already-folded batch is a full
-    no-op (the probe would otherwise see the batch's own folded
-    fingerprints and wrongly drop its docs)."""
-    import os
-
-    from cerebro_spark.operators.multimodal import (
-        byte_dhash_df,
-        query_hamming_index,
-    )
-    from cerebro_spark.streaming.sinks import compact_media_index
-
-    index = str(tmp_path / "index")
-    out = str(tmp_path / "out")
-    sink = media_neardup_filter_sink(index, out)
-    for b in range(3):
-        df = spark.createDataFrame(
-            [(b * 10 + i, _doc(b * 10 + i)) for i in range(1, 4)],
-            "doc_id long, text string",
-        )
-        sink(df, b)
-    kept_before = sorted(
-        r["doc_id"] for r in spark.read.parquet(out).collect()
-    )
-
-    probe = byte_dhash_df(
-        spark.createDataFrame(
-            [(99, _shift(_doc(11))), (98, _doc(500))],
-            "doc_id long, text string",
-        )
-    )
-
-    def probe_hits():
-        return sorted(
-            (r["probe_id"], r["match_id"])
-            for r in query_hamming_index(spark, index, probe).collect()
-        )
-
-    def n_files():
-        return sum(
-            1 for _, _, names in os.walk(index)
-            for f in names if f.endswith(".parquet")
-        )
-
-    before_hits, before_files = probe_hits(), n_files()
-    assert before_hits == [(99, 11)]
-    compact_media_index(spark, index)
-    assert probe_hits() == before_hits
-    assert n_files() < before_files
-    # replaying a folded batch: full no-op, survivors unchanged
-    sink(
-        spark.createDataFrame(
-            [(21, _doc(21)), (22, _doc(22)), (23, _doc(23))],
-            "doc_id long, text string",
-        ),
-        2,
-    )
-    assert sorted(
-        r["doc_id"] for r in spark.read.parquet(out).collect()
-    ) == kept_before
-    # sink keeps working after compaction: next NEW batch still dedups
-    sink(
-        spark.createDataFrame(
-            [(77, _shift(_doc(11), 4)), (78, _doc(777))],
-            "doc_id long, text string",
-        ),
-        3,
-    )
-    kept = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert 77 not in kept and 78 in kept
-
-
 def test_media_sink_marker_read_failures_fail_closed(spark, tmp_path):
     """A transient/corrupt read of the params or compacted_through marker
     must FAIL the micro-batch (foreachBatch retries it) — never fail-open

@@ -109,59 +109,6 @@ def test_neardup_sink_replay_idempotent(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_compact_neardup_index_preserves_probes(spark, tmp_path):
-    """Compaction collapses the per-batch directories into one generation
-    with identical probe results and fewer files."""
-    import os
-
-    from cerebro_spark.streaming.sinks import compact_neardup_index
-    from cerebro_spark.operators.dedup import query_lsh_index
-
-    index = str(tmp_path / "index")
-    out = str(tmp_path / "out")
-    sink = neardup_filter_sink(index, out, n=3, num_hashes=32, bands=8,
-                               threshold=0.5)
-    for b in range(3):
-        df = spark.createDataFrame(
-            [(b * 10 + i, _doc(b * 10 + i)) for i in range(1, 4)],
-            "doc_id long, text string",
-        )
-        sink(df, b)
-
-    probe = spark.createDataFrame(
-        [(99, _doc(11)), (98, _doc(500))], "doc_id long, text string"
-    )
-
-    def probe_hits():
-        return sorted(
-            (r["probe_id"], r["match_id"])
-            for r in query_lsh_index(
-                spark, index, probe, n=3, num_hashes=32, bands=8,
-                threshold=0.5,
-            ).collect()
-        )
-
-    def n_files():
-        return sum(
-            1 for _, _, names in os.walk(index)
-            for f in names if f.endswith(".parquet")
-        )
-
-    before_hits, before_files = probe_hits(), n_files()
-    assert before_hits == [(99, 11)]
-    compact_neardup_index(spark, index)
-    assert probe_hits() == before_hits
-    assert n_files() < before_files
-    # sink keeps working after compaction (next batch appends normally)
-    sink(
-        spark.createDataFrame([(77, _doc(11))], "doc_id long, text string"),
-        3,
-    )
-    kept = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert 77 not in kept  # near-dup of indexed doc 11 still caught
-
-
-@pytest.mark.slow
 def test_text_sink_marker_read_failures_fail_closed(spark, tmp_path):
     """Corrupt params / compacted_through markers must fail the batch (so
     foreachBatch retries) instead of fail-opening into 'first batch' —

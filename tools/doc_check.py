@@ -18,8 +18,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 #: operator-level rows: documented in the table, gated via a *_check query
 OPERATOR_ROWS = {
@@ -37,7 +39,7 @@ def main() -> int:
     n = len(qs)
     ok = True
 
-    queries_md = open("/root/repo/QUERIES.md").read()
+    queries_md = open(ROOT / "QUERIES.md").read()
     rows = set(re.findall(r"^\| `([a-z0-9_]+)` \|", queries_md, re.M))
 
     missing = sorted(qs - rows)
@@ -64,7 +66,7 @@ def main() -> int:
               f"entries — {sorted(qs - set(entry.oracle_sql()))}")
         ok = False
 
-    readme = open("/root/repo/README.md").read()
+    readme = open(ROOT / "README.md").read()
     m2 = re.search(r"(\d+) queries, all (\d+) with DuckDB", readme)
     if not m2 or int(m2.group(1)) != n or int(m2.group(2)) != n:
         print(f"DOCS STALE: README says {m2.groups() if m2 else None}, "
