@@ -63,6 +63,15 @@ _RELATION_CACHE: (
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
+    """The testdata table ``<sf_dir>/<name>.parquet``, resolved once per
+    session and path.
+
+    Contract: the table's files do not change while the session loads it.
+    The reused relation keeps the file listing of its first load, so a
+    rewrite in place goes unseen (added files) or fails the next scan
+    (deleted files).  A caller that rewrites a table mid-session calls
+    ``clear_relation_cache(spark)`` afterwards.
+    """
     path = os.path.join(sf_dir, f"{name}.parquet")
     per_session = _RELATION_CACHE.setdefault(spark, {})
     cached = per_session.get(path)
@@ -82,6 +91,12 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
         )
     per_session[path] = df
     return df
+
+
+def clear_relation_cache(spark: SparkSession) -> None:
+    """Drop ``spark``'s reused ``load_table`` relations; the next load of
+    each table resolves (schema and file listing) afresh."""
+    _RELATION_CACHE.pop(spark, None)
 
 
 def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
@@ -133,22 +148,13 @@ def compact_store(
     overwrite so untouched partitions are left alone by a filtered rewrite.
     """
     df = spark.read.parquet(path)
-    # Restore with the engine default ('static') when the conf was never set:
-    # a None sentinel would skip the restore and leave the whole session in
-    # dynamic overwrite mode permanently.
-    with_conf = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
+    (
+        df.repartition(target_files_per_partition, *[F.col(c) for c in partition_cols])
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.repartition(target_files_per_partition, *[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", with_conf)
 
 
 def write_wide_store(

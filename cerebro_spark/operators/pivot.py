@@ -34,14 +34,6 @@ def pivot_fields(
     return p.agg(F.first(value_col, ignorenulls=True))
 
 
-def explode_fields(points: DataFrame, fields_col: str = "fields") -> DataFrame:
-    """Canonical point table → long (time, measurement, field, value) rows.
-    ``explode`` of the map column; narrow transform, no shuffle."""
-    return points.select(
-        "*", F.explode(F.col(fields_col)).alias("field", "value")
-    ).drop(fields_col)
-
-
 def unpivot_to_points(
     df: DataFrame,
     measurement: str,

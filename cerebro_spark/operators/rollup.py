@@ -65,16 +65,9 @@ def refresh_rollup(
     rolled = rollup_points_daily(
         pts.drop("date")  # re-derive from time; store layout may evolve
     )
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        rolled.write.mode("overwrite").partitionBy("bucket", "date").parquet(
-            rollup_path
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    rolled.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("bucket", "date").parquet(rollup_path)
 
 
 def rollup_maintenance_sink(store_path: str, rollup_path: str):
@@ -92,16 +85,9 @@ def rollup_maintenance_sink(store_path: str, rollup_path: str):
         # replayed batch dynamic-overwrites its own (bucket, date, __batch)
         # leaves instead of appending duplicates, while bucket/date prefix
         # dirs keep partition pruning for readers.
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            enriched.write.mode("overwrite").partitionBy(
-                "bucket", "date", "__batch"
-            ).parquet(store_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        enriched.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("bucket", "date", "__batch").parquet(store_path)
         touched = [
             (r["bucket"], str(r["date"]))
             for r in enriched.select("bucket", "date").distinct().collect()

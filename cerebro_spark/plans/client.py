@@ -4,9 +4,11 @@ The reference client compiles (bucket, measurement, field, start, end) into a
 Flux string executed by InfluxDB (``/root/reference/cerebro/client.py:57-91``):
 scan → range → measurement filter → optional field filter → pivot.  Here the
 same parameters build a DataFrame expression chain over our stored point
-tables, and Catalyst is the planner the reference never had — the time/
-measurement predicates push into the parquet scan (partition pruning when the
-store is date/bucket-partitioned).
+tables: one scan under one predicate, at most one shuffle, and for
+``field=None`` one field-name discovery aggregate.  A parquet path's schema is
+read on its first query only, its files are listed on every query (later
+commits stay visible), and a path partitioned on ``date`` (the ingest sink's
+layout) reads only the dates in range.  Naive bounds are UTC.
 
 Relative times: the reference accepts Flux-style ``-15m``/``-1h`` bounds
 (`client.py:70-78`); ``_resolve_time`` reproduces that (T23).
@@ -17,10 +19,9 @@ from __future__ import annotations
 import datetime as dt
 import re
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from cerebro_spark.operators.pivot import explode_fields, pivot_fields
+from pyspark.sql.types import StructType
 
 _REL_RE = re.compile(r"^-(\d+(?:\.\d+)?)(s|m|h|d|w)$")
 _UNIT_SECONDS = {"s": 1, "m": 60, "h": 3600, "d": 86400, "w": 604800}
@@ -53,11 +54,19 @@ def _resolve_time(
     return dt.datetime.fromisoformat(value.replace("Z", "+00:00")).replace(tzinfo=None)
 
 
+def _utc(t: dt.datetime) -> Column:
+    """Bound literal; ``F.lit`` would read a naive datetime as host-local."""
+    return F.lit(t if t.tzinfo else t.replace(tzinfo=dt.timezone.utc))
+
+
+_AGGS = {"avg": F.avg, "mean": F.avg, "min": F.min, "max": F.max, "sum": F.sum, "count": F.count}
+
+
 class CerebroClient:
     """Query interface over stored point tables.
 
-    ``store`` maps bucket name → a function or path yielding the canonical
-    point DataFrame (POINT_SCHEMA).  ``query`` mirrors the reference signature
+    ``store`` maps bucket name → a parquet path or a DataFrame of canonical
+    points (POINT_SCHEMA).  ``query`` mirrors the reference signature
     (`client.py:93-129`) and returns the pivoted wide DataFrame.
     """
 
@@ -71,24 +80,32 @@ class CerebroClient:
         self.store = store or {}
         self.rollups: dict[str, object] = {}
         self._now = now  # pinned clock for deterministic tests
+        #: path → (schema, partitioned on ``date``), from the path's first query
+        self._layouts: dict[str, tuple[StructType, bool]] = {}
 
     def register_bucket(self, bucket: str, path_or_df: str | DataFrame) -> None:
+        self._layouts.pop(self.store.get(bucket), None)
         self.store[bucket] = path_or_df
 
     def register_rollup(self, bucket: str, path_or_df: str | DataFrame) -> None:
         """Attach a maintained daily rollup (``operators.rollup`` layout:
         measurement, field, date, n, vmin, vmax, vsum) — day-aligned
         ``aggregate_window`` queries are then rewritten onto it."""
+        self._layouts.pop(self.rollups.get(bucket), None)
         self.rollups[bucket] = path_or_df
 
-    def _scan(self, bucket: str) -> DataFrame:
-        """Q1 — bucket scan (`client.py:68`)."""
-        src = self.store[bucket]
-        return src if isinstance(src, DataFrame) else self.spark.read.parquet(src)
-
-    def _rollup_scan(self, bucket: str) -> DataFrame:
-        src = self.rollups[bucket]
-        return src if isinstance(src, DataFrame) else self.spark.read.parquet(src)
+    def _read(self, src: str | DataFrame) -> tuple[DataFrame, bool]:
+        """Q1 — bucket scan (`client.py:68`), and whether it is partitioned
+        on ``date``; a path's schema is inferred on its first read only."""
+        if isinstance(src, DataFrame):
+            return src, False
+        if src not in self._layouts:
+            df = self.spark.read.parquet(src)
+            parts = df._jdf.queryExecution().analyzed().relation().partitionSchema()
+            self._layouts[src] = (df.schema, "date" in list(parts.fieldNames()))
+            return df, self._layouts[src][1]
+        schema, dated = self._layouts[src]
+        return self.spark.read.schema(schema).parquet(src), dated
 
     def _try_rollup_rewrite(
         self,
@@ -114,40 +131,35 @@ class CerebroClient:
         def midnight(t: dt.datetime | None) -> bool:
             return t is None or (t.hour, t.minute, t.second, t.microsecond) == (0, 0, 0, 0)
 
-        if (
-            bucket not in self.rollups
-            or every % 86400 != 0
-            or not midnight(t0)
-            or not midnight(t1)
-            or fn not in ("avg", "mean", "min", "max", "sum", "count")
-        ):
+        if (bucket not in self.rollups or every % 86400 != 0 or fn not in _AGGS
+                or not midnight(t0) or not midnight(t1)):
             return None
-        r = self._rollup_scan(bucket).filter(F.col("measurement") == measurement)
+        pred = F.col("measurement") == measurement
         if t0 is not None:
-            r = r.filter(F.col("date") >= F.lit(t0.date()))
+            pred &= F.col("date") >= F.lit(t0.date())
         if t1 is not None:
-            r = r.filter(F.col("date") < F.lit(t1.date()))
+            pred &= F.col("date") < F.lit(t1.date())
         if field is not None:
-            r = r.filter(F.col("field") == field)
-        value = {
-            "avg": F.sum("vsum") / F.sum("n"),
-            "mean": F.sum("vsum") / F.sum("n"),
-            "min": F.min("vmin"),
-            "max": F.max("vmax"),
-            "sum": F.sum("vsum"),
-            "count": F.sum("n"),
-        }[fn]
-        day_epoch = F.col("date").cast("timestamp").cast("long")
-        return (
-            r.groupBy(
-                F.timestamp_seconds(
-                    F.floor(day_epoch / every) * every
-                ).alias("time"),
-                "measurement",
-                "field",
-            )
-            .agg(value.alias("value"))
-        )
+            # n = 0 marks a day of only null values, which the raw path drops
+            pred &= (F.col("field") == field) & (F.col("n") > 0)
+        value = {"min": F.min("vmin"), "max": F.max("vmax"), "sum": F.sum("vsum"),
+                 "count": F.sum("n")}.get(fn, F.sum("vsum") / F.sum("n"))  # avg, mean
+        day = F.col("date").cast("timestamp").cast("long")
+        window = F.timestamp_seconds(F.floor(day / every) * every).alias("time")
+        rollup = self._read(self.rollups[bucket])[0].filter(pred)
+        return rollup.groupBy(window, "measurement", "field").agg(value.alias("value"))
+
+    def _pivot(self, rows: DataFrame, keys: Column, cell) -> DataFrame:
+        """Q5 — every field long→wide (`client.py:85-90`), one shuffle: a row per
+        time, a column per name in the ``keys`` arrays (one aggregate, sorted
+        as Spark's pivot sorts them, under its cap), cell = first ``cell(n)``."""
+        names = sorted(set(rows.agg(F.flatten(F.collect_set(keys))).first()[0]))
+        cap = int(self.spark.conf.get("spark.sql.pivotMaxValues"))
+        if len(names) > cap:
+            raise ValueError(f"more than spark.sql.pivotMaxValues={cap} fields to pivot")
+        if not names:
+            return rows.select("time").distinct()
+        return rows.groupBy("time").agg(*[F.first(cell(n), ignorenulls=True).alias(n) for n in names])
 
     def query(
         self,
@@ -166,61 +178,49 @@ class CerebroClient:
         avg/min/max/sum/count) applied per field over tumbling buckets —
         the aggregation surface the reference delegated to InfluxDB."""
         now = self._now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        df = self._scan(bucket)
-
-        # Q2 — time-range predicate (`client.py:70-78`); closed-open [start, stop)
-        # matching Flux range() semantics.
         t0, t1 = _resolve_time(start, now), _resolve_time(end, now)
-        if t0 is not None:
-            df = df.filter(F.col("time") >= F.lit(t0))
-        if t1 is not None:
-            df = df.filter(F.col("time") < F.lit(t1))
-
-        # Q3 — measurement filter (`client.py:80`).
-        df = df.filter(F.col("measurement") == measurement)
-
-        # Q4 — field filter (`client.py:82-83`).  With a concrete field the
-        # long view is a direct map extraction — no explode of every entry,
-        # so only the requested key is materialized per row; the explode path
-        # is reserved for field=None (all fields).
-        if field is not None:
-            long = df.select(
-                "time",
-                "measurement",
-                F.lit(field).alias("field"),
-                F.element_at(F.col("fields"), field).alias("value"),
-            ).filter(F.col("value").isNotNull())
-        else:
-            long = explode_fields(df).select(
-                "time", "measurement", "field", "value"
-            )
-
-        if aggregate_window is not None:
-            every, fn = aggregate_window
-            rolled = self._try_rollup_rewrite(
-                bucket, measurement, field, t0, t1, every, fn
-            )
-            if rolled is not None:
-                long = rolled
+        every, fn = aggregate_window or (None, None)
+        # rollup first: a served query never touches the point store
+        long = aggregate_window and self._try_rollup_rewrite(
+            bucket, measurement, field, t0, t1, every, fn)
+        if long is None:
+            # Q2/Q3 — one predicate: Flux range()'s closed-open [t0, t1) (`client.py:70-78`),
+            # the dates it touches, the measurement (`client.py:80`).
+            df, dated = self._read(self.store[bucket])
+            pred = F.col("measurement") == measurement
+            if t0 is not None:
+                pred &= F.col("time") >= _utc(t0)
+            if t1 is not None:
+                pred &= F.col("time") < _utc(t1)
+            if dated and t0 is not None:
+                pred &= F.col("date") >= F.to_date(_utc(t0))
+            if dated and t1 is not None:  # time < t1 is time <= t1 - 1 µs
+                pred &= F.col("date") <= F.to_date(_utc(t1 - dt.timedelta(microseconds=1)))
+            df = df.filter(pred)
+            # Q4 — field filter (`client.py:82-83`): one map lookup per row for a field; all
+            # fields pivot straight from the maps unless pivot=False or a window explodes them.
+            if field is not None:
+                value = F.element_at(F.col("fields"), field)
+                long = df.filter(value.isNotNull()).select(
+                    "time", "measurement", F.lit(field).alias("field"), value.alias("value")
+                )
+            elif pivot and aggregate_window is None:
+                fields = F.col("fields")
+                return self._pivot(df.filter(F.size(fields) > 0), F.map_keys(fields), fields.getItem)
             else:
-                aggs = {
-                    "avg": F.avg, "mean": F.avg, "min": F.min, "max": F.max,
-                    "sum": F.sum, "count": F.count,
-                }
-                long = (
-                    long.groupBy(
-                        F.timestamp_seconds(
-                            F.floor(F.col("time").cast("long") / every) * every
-                        ).alias("time"),
-                        "measurement",
-                        "field",
-                    )
-                    .agg(aggs[fn]("value").alias("value"))
+                long = df.select("time", "measurement", F.explode("fields").alias("field", "value"))
+            if aggregate_window is not None:
+                window = F.timestamp_seconds(F.floor(F.col("time").cast("long") / every) * every)
+                long = long.groupBy(window.alias("time"), "measurement", "field").agg(
+                    _AGGS[fn]("value").alias("value")
                 )
 
         if not pivot:
             return long
-
-        # Q5 — long→wide pivot (`client.py:85-90`).
-        values = [field] if field is not None else None
-        return pivot_fields(long, "field", "value", row_keys=["time"], values=values)
+        # Q5 — one shuffle: a concrete field aggregated per window already has
+        # one row per time; a raw one keeps the first value per time.
+        if field is not None and aggregate_window is not None:
+            return long.select("time", F.col("value").alias(field))
+        if field is not None:
+            return long.groupBy("time").agg(F.first("value", ignorenulls=True).alias(field))
+        return self._pivot(long, F.array("field"), lambda n: F.when(F.col("field") == n, F.col("value")))

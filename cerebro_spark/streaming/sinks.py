@@ -369,16 +369,9 @@ def keyed_upsert_sink(
         # small-file regime (store_health's flag) — the repartition is a
         # shuffle of REWRITTEN rows only and doubles as inline compaction.
         latest = latest.repartition(len(touched), F.col("__bucket"))
-        with_conf = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            latest.write.mode("overwrite").partitionBy("__bucket").parquet(path)
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", with_conf
-            )
+        latest.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("__bucket").parquet(path)
 
     return write
 

@@ -928,3 +928,142 @@ def test_avi_roundtrip_property(h2, nframes, seed):
     dec = decode_video_frames(encode_avi_gray(frames, fps=2), every_ms=500)
     assert len(dec) == nframes
     assert all(np.array_equal(g, frames[i]) for i, (_, g) in enumerate(dec))
+
+
+# -- CerebroClient vs a brute force over a date-partitioned path store ------
+
+
+_CLIENT_DAY = dt.datetime(2024, 1, 2, tzinfo=dt.timezone.utc)
+_CLIENT_FIELDS = ["a", "b", "c"]
+
+
+def _client_expected(pts, m, field, t0, t1, window):
+    """What ``CerebroClient.query`` returns, from plain Python: {epoch
+    seconds: {column: candidates}} where candidates is a set of acceptable
+    values (several when points of two tag sets share a time and the raw
+    pivot keeps either), plus the column names.
+
+    - a concrete field keeps points whose value is not null; field=None
+      keeps every map entry, so a field only ever null still gets a column
+      and its window a count of 0;
+    - a window groups by floor(epoch / every) * every; a field absent from
+      a window reads null there."""
+    rows = [
+        (int(t.timestamp()), f) for mm, t, f in pts if mm == m and t0 <= t < t1
+    ]
+    entries = [
+        (ts, k, v) for ts, f in rows for k, v in f.items()
+        if field is None or (k == field and v is not None)
+    ]
+    names = [field] if field else sorted({k for _, k, _ in entries})
+    groups = {}
+    for ts, k, v in entries:
+        key = ts - ts % window[0] if window else ts
+        groups.setdefault(key, {}).setdefault(k, []).append(v)
+    out = {}
+    for key, by_field in groups.items():
+        out[key] = {}
+        for n in names:
+            vals = by_field.get(n)
+            nn = [v for v in vals or [] if v is not None]
+            if window is None:
+                out[key][n] = set(nn) or {None}
+            elif vals is None:
+                out[key][n] = {None}
+            elif window[1] == "count":
+                out[key][n] = {len(nn)}
+            elif not nn:
+                out[key][n] = {None}
+            else:
+                out[key][n] = {max(nn) if window[1] == "max" else sum(nn) / len(nn)}
+    return names, out
+
+
+def _client_matches(got, names, want) -> bool:
+    if got.columns != ["time", *names]:
+        return False
+    rows = got.collect()
+    if sorted(int(r["time"].timestamp()) for r in rows) != sorted(want):
+        return False
+    for r in rows:
+        cells = want[int(r["time"].timestamp())]
+        for n in names:
+            v, ok = r[n], cells[n]
+            if v is None or None in ok:
+                if not (v is None and None in ok):
+                    return False
+            elif not any(w is not None and abs(v - w) <= 1e-9 * max(1.0, abs(w)) for w in ok):
+                return False
+    return True
+
+
+@settings(**SETTINGS)
+@given(
+    points=st.lists(
+        st.tuples(
+            st.sampled_from(["m", "n"]),
+            st.sampled_from(["x", "y"]),          # tag set: times may repeat
+            st.integers(0, 3 * 24 * 4 - 1),       # quarter hour within 3 days
+            st.dictionaries(
+                st.sampled_from(_CLIENT_FIELDS),
+                st.one_of(st.none(), st.integers(-50, 50).map(float)),
+                max_size=3,                        # empty maps and nulls too
+            ),
+        ),
+        min_size=1,
+        max_size=40,
+    ),
+    start=st.integers(0, 3 * 24 * 4),
+    length=st.sampled_from([0, 1, 4, 30, 96, 200]),   # quarter hours
+    days=st.tuples(st.integers(0, 3), st.integers(0, 3)),
+    fns=st.tuples(*[st.sampled_from(["avg", "count", "max"])] * 3),
+)
+def test_client_matches_bruteforce_on_partitioned_store(
+    spark, tmp_path_factory, points, start, length, days, fns
+):
+    from cerebro_spark.operators.rollup import rollup_points_daily
+    from cerebro_spark.plans.client import CerebroClient
+    from cerebro_spark.schema import POINT_SCHEMA
+
+    quarter = dt.timedelta(minutes=15)
+    points = [*points, ("n", "x", 0, {"a": 1.0})]  # the rollup is never empty
+    pts = [(m, _CLIENT_DAY + q * quarter, f) for m, _, q, f in points]
+    df = spark.createDataFrame(
+        [(m, {"d": d}, f, None, None, _CLIENT_DAY + q * quarter, "b")
+         for m, d, q, f in points],
+        POINT_SCHEMA,
+    )
+    root = tmp_path_factory.mktemp("client_store")
+    store, roll = str(root / "store"), str(root / "roll")
+    df.withColumn("date", F.to_date("time")).write.partitionBy("bucket", "date").parquet(store)
+    rollup_points_daily(df).write.partitionBy("bucket", "date").parquet(roll)
+    plain = CerebroClient(spark, {"b": store})
+    rolled = CerebroClient(spark, {"b": store})
+    rolled.register_rollup("b", roll)
+
+    def naive(t):
+        return t.replace(tzinfo=None)
+
+    # a quarter-hour range (crosses midnight, or is empty when length is 0)
+    t0 = _CLIENT_DAY + start * quarter
+    t1 = t0 + length * quarter
+    cases = [
+        (plain, "a", t0, t1, None),
+        (plain, None, t0, t1, None),
+        (plain, "b", t0, t1, (3600, fns[0])),
+        (plain, None, t0, t1, (3 * 3600, fns[1])),
+    ]
+    # a day-aligned range: the rollup serves it, the plain client scans
+    d0, d1 = sorted(days)
+    d0, d1 = _CLIENT_DAY + dt.timedelta(days=d0), _CLIENT_DAY + dt.timedelta(days=d1)
+    for client in (plain, rolled):
+        cases += [
+            (client, "a", d0, d1, (86400, fns[2])),
+            (client, None, d0, d1, (86400, fns[2])),
+        ]
+    for client, field, lo, hi, window in cases:
+        got = client.query(
+            "b", "m", field=field, start=naive(lo), end=naive(hi), aggregate_window=window
+        )
+        names, want = _client_expected(pts, "m", field, lo, hi, window)
+        assert _client_matches(got, names, want), (client is rolled, field, lo, hi, window)

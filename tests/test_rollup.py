@@ -79,6 +79,34 @@ def test_incremental_rollup_prunes_untouched_partitions(spark, tmp_path):
     assert got[("b1", "temp", "value", "2024-01-02")] == (2, 2.0, 9.0, 11.0)
 
 
+def test_rollup_writers_leave_session_conf_alone(spark, tmp_path, monkeypatch):
+    """Dynamic partition overwrite is a writer option: the maintenance sink
+    and ``refresh_rollup`` set nothing on the shared session, and a refresh
+    of day 2 leaves day 1's rollup partition in place."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from cerebro_spark.operators.rollup import refresh_rollup
+
+    store, roll = str(tmp_path / "store"), str(tmp_path / "roll")
+    sink = rollup_maintenance_sink(store, roll)
+    first = spark.createDataFrame([_pt("temp", 1, 1), _pt("temp", 2, 2)], POINT_SCHEMA)
+    second = spark.createDataFrame([_pt("temp", 9, 2)], POINT_SCHEMA)
+    sets, real_set = [], RuntimeConfig.set
+
+    def record(self, key, value):
+        sets.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", record)
+    sink(first, 0)
+    sink(second, 1)
+    refresh_rollup(spark, store, roll, [("b1", "2024-01-02")])
+    assert sets == []
+    got = _rollup_rows(spark, roll)
+    assert got[("b1", "temp", "value", "2024-01-01")] == (1, 1.0, 1.0, 1.0)
+    assert got[("b1", "temp", "value", "2024-01-02")] == (2, 2.0, 9.0, 11.0)
+
+
 def test_rollup_sink_under_streaming_engine(spark, tmp_path):
     """foreachBatch wiring: replayed point files → rollup maintenance."""
     src_dir = str(tmp_path / "src")

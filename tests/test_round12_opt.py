@@ -184,3 +184,19 @@ def test_small_df_connect_fallback(spark):
     got = small_df(NoSC(), [(1, 2)], "a int, b int").collect()
     assert [(r["a"], r["b"]) for r in got] == [(1, 2)]
     assert default_parallelism(NoSC()) == 8
+
+
+def test_load_table_relation_cache_clear(spark, tmp_path):
+    """ADVICE r12: ``load_table`` reuses a table's resolved relation, file
+    listing included, so a table rewritten mid-session reads stale until
+    ``clear_relation_cache`` drops the reuse."""
+    from cerebro_spark.io import clear_relation_cache, load_table
+
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1,)], "k int").write.parquet(path)
+    assert [r["k"] for r in load_table(spark, "t", str(tmp_path)).collect()] == [1]
+
+    spark.createDataFrame([(2,)], "k int").write.mode("append").parquet(path)
+    assert [r["k"] for r in load_table(spark, "t", str(tmp_path)).collect()] == [1]
+    clear_relation_cache(spark)
+    assert sorted(r["k"] for r in load_table(spark, "t", str(tmp_path)).collect()) == [1, 2]
