@@ -7,8 +7,9 @@ same parameters build a DataFrame expression chain over our stored point
 tables: one scan under one predicate, at most one shuffle, and for
 ``field=None`` one field-name discovery aggregate.  A parquet path's schema is
 read on its first query only, its files are listed on every query (later
-commits stay visible), and a path partitioned on ``date`` (the ingest sink's
-layout) reads only the dates in range.  Naive bounds are UTC.
+commits stay visible), and a path partitioned on ``bucket`` and ``date`` (the
+ingest sink's layout) reads only the queried bucket and the dates in range.
+Naive bounds are UTC.
 
 Relative times: the reference accepts Flux-style ``-15m``/``-1h`` bounds
 (`client.py:70-78`); ``_resolve_time`` reproduces that (T23).
@@ -80,8 +81,9 @@ class CerebroClient:
         self.store = store or {}
         self.rollups: dict[str, object] = {}
         self._now = now  # pinned clock for deterministic tests
-        #: path → (schema, partitioned on ``date``), from the path's first query
-        self._layouts: dict[str, tuple[StructType, bool]] = {}
+        #: path → (schema, partitioned on ``date``, on ``bucket``), from the
+        #: path's first query
+        self._layouts: dict[str, tuple[StructType, bool, bool]] = {}
 
     def register_bucket(self, bucket: str, path_or_df: str | DataFrame) -> None:
         self._layouts.pop(self.store.get(bucket), None)
@@ -94,18 +96,28 @@ class CerebroClient:
         self._layouts.pop(self.rollups.get(bucket), None)
         self.rollups[bucket] = path_or_df
 
-    def _read(self, src: str | DataFrame) -> tuple[DataFrame, bool]:
-        """Q1 — bucket scan (`client.py:68`), and whether it is partitioned
-        on ``date``; a path's schema is inferred on its first read only."""
+    def _read(
+        self, src: str | DataFrame, bucket: str, measurement: str
+    ) -> tuple[DataFrame, Column, bool]:
+        """Q1 — bucket scan (`client.py:68`): the frame, its predicate for
+        ``bucket`` and the measurement (`client.py:80`), and whether it is
+        partitioned on ``date``.  A path partitioned on ``bucket`` holds every
+        bucket the ingest sink wrote, so its predicate names the bucket; a
+        path's schema and partition columns are read on its first read only."""
+        pred = F.col("measurement") == measurement
         if isinstance(src, DataFrame):
-            return src, False
+            return src, pred, False
         if src not in self._layouts:
             df = self.spark.read.parquet(src)
             parts = df._jdf.queryExecution().analyzed().relation().partitionSchema()
-            self._layouts[src] = (df.schema, "date" in list(parts.fieldNames()))
-            return df, self._layouts[src][1]
-        schema, dated = self._layouts[src]
-        return self.spark.read.schema(schema).parquet(src), dated
+            names = set(parts.fieldNames())
+            self._layouts[src] = (df.schema, "date" in names, "bucket" in names)
+        else:
+            df = self.spark.read.schema(self._layouts[src][0]).parquet(src)
+        _, dated, bucketed = self._layouts[src]
+        if bucketed:
+            pred &= F.col("bucket") == bucket
+        return df, pred, dated
 
     def _try_rollup_rewrite(
         self,
@@ -134,7 +146,7 @@ class CerebroClient:
         if (bucket not in self.rollups or every % 86400 != 0 or fn not in _AGGS
                 or not midnight(t0) or not midnight(t1)):
             return None
-        pred = F.col("measurement") == measurement
+        rollup, pred, _ = self._read(self.rollups[bucket], bucket, measurement)
         if t0 is not None:
             pred &= F.col("date") >= F.lit(t0.date())
         if t1 is not None:
@@ -146,8 +158,7 @@ class CerebroClient:
                  "count": F.sum("n")}.get(fn, F.sum("vsum") / F.sum("n"))  # avg, mean
         day = F.col("date").cast("timestamp").cast("long")
         window = F.timestamp_seconds(F.floor(day / every) * every).alias("time")
-        rollup = self._read(self.rollups[bucket])[0].filter(pred)
-        return rollup.groupBy(window, "measurement", "field").agg(value.alias("value"))
+        return rollup.filter(pred).groupBy(window, "measurement", "field").agg(value.alias("value"))
 
     def _pivot(self, rows: DataFrame, keys: Column, cell) -> DataFrame:
         """Q5 — every field long→wide (`client.py:85-90`), one shuffle: a row per
@@ -184,10 +195,9 @@ class CerebroClient:
         long = aggregate_window and self._try_rollup_rewrite(
             bucket, measurement, field, t0, t1, every, fn)
         if long is None:
-            # Q2/Q3 — one predicate: Flux range()'s closed-open [t0, t1) (`client.py:70-78`),
-            # the dates it touches, the measurement (`client.py:80`).
-            df, dated = self._read(self.store[bucket])
-            pred = F.col("measurement") == measurement
+            # Q2/Q3 — one predicate: the bucket and measurement, Flux range()'s
+            # closed-open [t0, t1) (`client.py:70-78`) and the dates it touches.
+            df, pred, dated = self._read(self.store[bucket], bucket, measurement)
             if t0 is not None:
                 pred &= F.col("time") >= _utc(t0)
             if t1 is not None:

@@ -9,7 +9,13 @@ for local[32] testing:
 - Arrow enabled for every pandas boundary (the only Python-side hot paths we
   allow are Arrow-batched);
 - UTC session timezone so timestamp semantics match the reference (all-UTC,
-  SURVEY §1.2) and the DuckDB oracle.
+  SURVEY §1.2) and the DuckDB oracle;
+- a whole-stage codegen cache of 1000 classes, so a long-lived session
+  (dashboards re-issuing the same client query shapes, batch transforms
+  re-running the same registry plans) reuses the classes it generated
+  instead of recompiling them.  The cache size is a static conf: it takes
+  effect only when ``get_spark`` builds the session, not on a session that
+  already exists.
 """
 
 from __future__ import annotations
@@ -80,6 +86,13 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # Spark's default keeps 100 generated classes.  One perfbench
+        # `dashboard` cycle (five client query kinds and five registry
+        # queries) compiles about 100, so each cycle evicted the last one's
+        # classes and compiled them again: 317 Janino compiles over the 30
+        # timed operations of a seed-7 run at 100, and 39 at 1000 (4-core
+        # host).  1000 holds that vocabulary several times over.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if master is not None:
         builder = builder.master(master)

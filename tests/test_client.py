@@ -155,3 +155,31 @@ def test_client_rollup_drops_a_day_of_only_null_values(spark, tmp_path):
         assert all("roll" in f for f in got.inputFiles())
         want = raw.query("b", "m", "v", **args).collect()
         assert got.collect() == want and [r["v"] for r in want] == [1]
+
+
+def test_client_reads_only_the_queried_bucket(spark, tmp_path):
+    """A path store holds every bucket the ingest sink wrote: a query of
+    bucket ``a`` sees only ``a``'s points, raw, for ``field=None`` and
+    served from the rollup."""
+    from cerebro_spark.operators.rollup import rollup_points_daily
+
+    day = dt.datetime(2024, 1, 1, 12, tzinfo=UTC)
+    pts = spark.createDataFrame(
+        [("m", {}, {"v": 1.0}, None, None, day, "a"),
+         ("m", {}, {"v": 10.0, "w": 5.0}, None, None, day + dt.timedelta(minutes=1), "b")],
+        POINT_SCHEMA,
+    )
+    path, roll = str(tmp_path / "store"), str(tmp_path / "roll")
+    _write_store(pts, path)
+    rollup_points_daily(pts).write.partitionBy("bucket", "date").parquet(roll)
+    client = CerebroClient(spark, {"a": path, "b": path})
+    client.register_rollup("a", roll)
+    span = dict(start="2024-01-01", end="2024-01-02")
+
+    assert [r["v"] for r in client.query("a", "m", "v", **span).collect()] == [1.0]
+    wide = client.query("a", "m", **span)
+    assert wide.columns == ["time", "v"] and [r["v"] for r in wide.collect()] == [1.0]
+    served = client.query("a", "m", "v", aggregate_window=(86400, "sum"), **span)
+    assert all("roll" in f for f in served.inputFiles())
+    assert [r["v"] for r in served.collect()] == [1.0]
+    assert [r["v"] for r in client.query("b", "m", "v", **span).collect()] == [10.0]

@@ -385,16 +385,23 @@ def test_native_streaming_session_window(spark, tmp_path):
     assert [r["n"] for r in out] == [4, 3]
 
 
-def test_streaming_gate_state_store_width_and_conf_restore(spark, sf_dir):
-    """The streaming gates size every replay's state store to
-    ``_STATE_PARTITIONS`` (8) whatever the session's shuffle width, and
-    restore the session conf afterwards — shown on ``streaming_ohlc_6h``
-    through its ``stateOperators[0].numShufflePartitions`` progress."""
+def test_streaming_gate_state_store_width_and_parent_conf_untouched(
+    spark, sf_dir, monkeypatch
+):
+    """The streaming gates replay in a child of the caller's session whose
+    state store is ``_STATE_PARTITIONS`` (1) wide whatever the caller's
+    shuffle width, and never write the caller's conf — shown on
+    ``streaming_ohlc_6h`` through its ``stateOperators[0].numShufflePartitions``
+    progress, heard on the child's stream manager."""
     import time
 
     from pyspark.sql.streaming import StreamingQueryListener
 
-    from cerebro_spark.queries.streaming_q import q_streaming_ohlc_6h
+    from cerebro_spark.io import load_table
+    from cerebro_spark.queries.streaming_q import (
+        _replay_session,
+        q_streaming_ohlc_6h,
+    )
 
     widths: list = []
 
@@ -415,16 +422,39 @@ def test_streaming_gate_state_store_width_and_conf_restore(spark, sf_dir):
 
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    load_table(spark, "events", sf_dir)  # its first load sets the read confs
+    child = _replay_session(spark)
     listener = Widths()
-    spark.streams.addListener(listener)
+    child.streams.addListener(listener)
+    writes: list = []
     try:
-        spark.conf.set(key, "3")
-        q_streaming_ohlc_6h(spark, sf_dir)
-        assert spark.conf.get(key) == "3"
+        with monkeypatch.context() as m:
+            m.setattr(spark.conf, "set", lambda *a: writes.append(a))
+            m.setattr(spark.conf, "unset", lambda *a: writes.append(a))
+            out = q_streaming_ohlc_6h(spark, sf_dir)
+        assert writes == [] and spark.conf.get(key) == "3"
+        assert out.count() > 0
         deadline = time.time() + 30  # listener events arrive asynchronously
         while not widths and time.time() < deadline:
             time.sleep(0.2)
-        assert widths and set(widths) == {8}
+        assert widths and set(widths) == {1}
     finally:
-        spark.streams.removeListener(listener)
+        child.streams.removeListener(listener)
         spark.conf.set(key, saved)
+
+
+def test_streaming_gates_leave_no_temp_view(spark, sf_dir):
+    """A gate replay's memory-sink view is dropped once its frame is bound:
+    no ``stream_gate_*`` view stays in the caller's session or the replay
+    child, and the returned frames still collect."""
+    from cerebro_spark.queries.streaming_q import (
+        _replay_session,
+        q_streaming_ohlc_6h,
+    )
+
+    outs = [q_streaming_ohlc_6h(spark, sf_dir) for _ in range(2)]
+    for session in (spark, _replay_session(spark)):
+        views = [t.name for t in session.catalog.listTables()]
+        assert not [v for v in views if v.startswith("stream_gate_")]
+    assert outs[0].count() == outs[1].count() > 0

@@ -75,9 +75,7 @@ def test_ingest_end_to_end(spark, tmp_path):
     assert any("bucket=sensors" in p for p in os.listdir(sink))
 
     # query the store through the client (Q1-Q6)
-    client = CerebroClient(
-        spark, {"sensors": out.filter(F.col("bucket") == "sensors")}
-    )
+    client = CerebroClient(spark, {"sensors": sink})
     wide = client.query(
         "sensors",
         measurement="temperature",
