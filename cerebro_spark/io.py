@@ -34,18 +34,28 @@ def _nano_ts_columns(path: str) -> tuple[str, ...]:
         return ()
 
 
+# Read confs every load needs.  ``get_spark`` sets all three when it builds
+# the session, so on its sessions a load writes nothing; a session built some
+# other way (a caller's own ``SparkSession``) gets the differing ones set on
+# its first load.  All three are runtime-settable.  Parquet TIMESTAMP(NANOS)
+# (older testdata's events.ts) has no Spark type: it reads as long, and the
+# loader converts it to µs (documented ns→µs delta, SURVEY §1.4).  Parquet
+# TIMESTAMP(MICROS, isAdjustedToUTC=false) must read as a regular
+# (UTC-session) TIMESTAMP, not TIMESTAMP_NTZ: the engine's time operators
+# cast ts→long epoch seconds, which NTZ forbids, and DuckDB oracles treat the
+# same bytes as plain timestamps.
+READ_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
+
+
 def _ensure_session_confs(spark: SparkSession) -> None:
-    """Make loads work on ANY SparkSession (e.g. a driver-created one that
-    didn't go through ``cerebro_spark.session.get_spark``): the nanos-parquet
-    legacy read and UTC timestamp semantics are required for correctness and
-    both are runtime-settable."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) must read as a regular
-    # (UTC-session) TIMESTAMP, not TIMESTAMP_NTZ: the engine's time operators
-    # cast ts→long epoch seconds, which NTZ forbids, and DuckDB oracles treat
-    # the same bytes as plain timestamps.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    """Set each of ``READ_CONFS`` whose current value differs, and no other."""
+    for key, value in READ_CONFS.items():
+        if spark.conf.get(key) != value:
+            spark.conf.set(key, value)
 
 
 # Per-session relation reuse (VERDICT r11 #9, the long-tail lever): every

@@ -16,15 +16,68 @@ for local[32] testing:
   instead of recompiling them.  The cache size is a static conf: it takes
   effect only when ``get_spark`` builds the session, not on a session that
   already exists.
+
+Local files are written through a small Java shim over Hadoop's local file
+system (``cerebro_spark/jvm/``).  The pip PySpark wheel ships no native
+``libhadoop``, so Hadoop's ``RawLocalFileSystem`` forks ``chmod`` for every
+file and directory it creates and ``readlink`` for every FileContext rename.
+An ingest drain (data files plus the offset, commit, source and sink logs)
+started about 95 processes, 44 of them serially on the stream thread.  The
+shim overrides exactly two calls: ``setPermission`` uses
+``java.nio.file.Files.setPosixFilePermissions``, and ``getFileLinkStatus``
+returns the plain file status when the path is not a symbolic link.  Every
+other call stays Hadoop's, including the ``.crc`` checksum sidecars and the
+FileContext rename the streaming checkpoint manager relies on.  ``get_spark``
+installs it (the jar on ``spark.driver.extraClassPath``, ``fs.file.impl`` and
+``fs.AbstractFileSystem.file.impl``) only when PySpark is about to launch a
+local-mode driver JVM itself.  A session whose JVM was started some other
+way (spark-submit, an existing context, a cluster) is left as it is: there
+the class would not be on the classpath, and every ``file://`` access would
+fail.
 """
 
 from __future__ import annotations
 
 import os
+import re
+from importlib import resources
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
+from cerebro_spark.io import READ_CONFS
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+LOCALFS_JAR = "cerebro-localfs.jar"
+LOCALFS_IMPL = {
+    "spark.hadoop.fs.file.impl": "cerebro.fs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "cerebro.fs.NioLocalFs",
+}
+
+
+def localfs_jar() -> str:
+    """Path of the packaged local file system jar."""
+    return str(resources.files("cerebro_spark.jvm") / LOCALFS_JAR)
+
+
+def _localfs_conf(master: str | None, extra_conf: dict[str, str] | None) -> dict[str, str]:
+    """The confs that install the local file system shim, or none.
+
+    Only a driver JVM that PySpark is about to launch here puts the jar on
+    its classpath; with a gateway already up (an existing or stopped
+    context, ``PYSPARK_GATEWAY_PORT`` from spark-submit) or a non-local
+    master (executor JVMs elsewhere) the classes would be missing.
+    """
+    if SparkContext._gateway is not None or os.environ.get("PYSPARK_GATEWAY_PORT"):
+        return {}
+    if master is None or not re.fullmatch(r"local(\[[^\]]*\])?", master):
+        return {}
+    cp = (extra_conf or {}).get("spark.driver.extraClassPath")
+    return {
+        "spark.driver.extraClassPath": os.pathsep.join(filter(None, [localfs_jar(), cp])),
+        **LOCALFS_IMPL,
+    }
 
 
 def get_spark(
@@ -41,7 +94,6 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -72,14 +124,6 @@ def get_spark(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
-        # Driver testdata has stored events.ts as TIMESTAMP(NANOS); Spark has
-        # no nanos type — read as long, loader converts to µs (documented
-        # ns→µs delta, SURVEY §1.4).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # ...and as TIMESTAMP(MICROS, isAdjustedToUTC=false) since round 3:
-        # read those as regular UTC-session timestamps, not TIMESTAMP_NTZ
-        # (time operators cast ts→epoch long, which NTZ forbids).
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Keep partition sizes bounded so a 100 TB scan fans out instead of
         # producing multi-GB tasks.
@@ -94,11 +138,13 @@ def get_spark(
         # host).  1000 holds that vocabulary several times over.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
+    if master is None and not os.environ.get("SPARK_MASTER"):
+        master = f"local[{cpus}]"
     if master is not None:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    # the testdata read confs (io.READ_CONFS) are set here, so loads through
+    # this session write none of them
+    conf = {**READ_CONFS, **(extra_conf or {}), **_localfs_conf(master, extra_conf)}
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()

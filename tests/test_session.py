@@ -1,7 +1,10 @@
 """The session factory's codegen cache keeps generated classes across
-queries."""
+queries, and its read confs make testdata loads write nothing to the
+session's conf."""
 
 from pyspark.sql import functions as F
+
+from cerebro_spark.io import READ_CONFS, clear_relation_cache, load_table
 
 
 def test_generated_code_is_reused_across_queries(spark):
@@ -20,3 +23,37 @@ def test_generated_code_is_reused_across_queries(spark):
     before = compiles.getCount()
     run(0)
     assert compiles.getCount() == before
+
+
+def _record_conf_writes(monkeypatch, session):
+    writes = []
+    real_set = session.conf.set
+
+    def recording_set(key, value):
+        writes.append((key, value))
+        real_set(key, value)
+
+    monkeypatch.setattr(session.conf, "set", recording_set)
+    return writes
+
+
+def test_load_table_writes_no_conf_on_a_get_spark_session(spark, sf_dir, monkeypatch):
+    clear_relation_cache(spark)
+    writes = _record_conf_writes(monkeypatch, spark)
+    assert load_table(spark, "events", sf_dir).count() > 0
+    assert writes == []
+
+
+def test_load_table_sets_read_confs_on_a_foreign_session(spark, sf_dir, monkeypatch):
+    """A session that did not come from ``get_spark`` still reads testdata
+    correctly: only the read confs that differ are written."""
+    foreign = spark.newSession()
+    foreign.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    foreign.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    foreign.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    writes = _record_conf_writes(monkeypatch, foreign)
+    expected = load_table(spark, "events", sf_dir).orderBy("ts").limit(5).collect()
+    got = load_table(foreign, "events", sf_dir).orderBy("ts").limit(5).collect()
+    assert sorted(k for k, _ in writes) == sorted(READ_CONFS)
+    assert {k: foreign.conf.get(k) for k in READ_CONFS} == READ_CONFS
+    assert got == expected
