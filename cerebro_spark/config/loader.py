@@ -284,12 +284,22 @@ def _amqp(spark: SparkSession, name: str, **params) -> DataFrame:
     )
 
 
+# The ingest child session's conf.  Spark charges each scanned file its size
+# plus ``openCostInBytes`` when packing files into tasks; its 4 MiB default
+# assumes flat files, while opening a landed point file costs about the
+# decode of 25 KB of map rows (3 ms at 8 MB/s per core, 4-core host).  At
+# 4 MiB perfbench's 21 landed files were packed by count, and the task with
+# the 1 MB hot file wrote 81% of the rows at 2 cores; at 32 KiB, 66%.
+INGEST_CONF = {"spark.sql.files.openCostInBytes": str(32 * 1024)}
+
+
 class IngestRunner:
     """C1/C3 parity: named streaming queries with status / stop / restart.
 
     One runner per engine instance; each configured source becomes one
     streaming query writing to the point store (per-source trigger cadence =
-    the reference's per-source poll delay).
+    the reference's per-source poll delay).  The queries run in the
+    caller's ``"ingest"`` ``child_session`` with ``INGEST_CONF``.
     """
 
     def __init__(
@@ -309,8 +319,10 @@ class IngestRunner:
         self._queries: dict[str, Any] = {}
 
     def _build(self, name: str):
+        from cerebro_spark.session import child_session
         from cerebro_spark.streaming.ingest import run_ingest
 
+        spark = child_session(self.spark, "ingest", INGEST_CONF)
         params = dict(self.selected[name])
         type_name = params.pop("type")
         builder = SOURCE_REGISTRY[type_name]
@@ -321,11 +333,11 @@ class IngestRunner:
         delay = params.pop("delay", None)
         token = _PUMP_NAMESPACE.set(self.checkpoint_root)
         try:
-            source_df = builder(self.spark, name, **params)
+            source_df = builder(spark, name, **params)
             tags = {"source": type_name, **self.config.get("tags", {}), **tags}
             try:
                 return run_ingest(
-                    self.spark,
+                    spark,
                     source_df,
                     sink_path=self.store_path,
                     checkpoint=os.path.join(self.checkpoint_root, name),

@@ -33,12 +33,12 @@ from __future__ import annotations
 import shutil
 import tempfile
 import uuid
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cerebro_spark.io import load_table
+from cerebro_spark.session import child_session
 
 _BUCKET = 21600  # 6 h — matches queries/tsdb_q.py's batch ohlc_6h
 
@@ -52,29 +52,6 @@ _BUCKET = 21600  # 6 h — matches queries/tsdb_q.py's batch ohlc_6h
 # and 1.27 s per gate, with state-store ``commitTimeMs`` 535, 135 and 46.
 _STATE_PARTITIONS = 1
 _SHUFFLE = "spark.sql.shuffle.partitions"
-
-# Every replay runs in a child of the caller's session (``newSession()``:
-# same SparkContext, its own SQL conf, temp views and stream manager), so
-# it runs at its own width while the caller's conf is never written.  One
-# child per parent, dying with it like ``io._RELATION_CACHE``: a fresh
-# child on every call cost about 0.1 s.
-_REPLAY_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, SparkSession]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _replay_session(spark: SparkSession) -> SparkSession:
-    """``spark``'s replay child, with ``spark``'s runtime SQL conf as of now
-    (time zone, ``nanosAsLong``, NTZ inference, ...) copied in.  Replays
-    from one parent share this conf, so they run one at a time."""
-    child = _REPLAY_SESSIONS.get(spark)
-    if child is None:
-        child = _REPLAY_SESSIONS[spark] = spark.newSession()
-    mine = child.conf.getAll
-    for key, value in spark.conf.getAll.items():
-        if mine.get(key) != value and child.conf.isModifiable(key):
-            child.conf.set(key, value)
-    return child
 
 
 def _events_as_points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,13 +86,13 @@ def _run_available_now(
     a property of the equivalence HARNESS, not of the operators: on a live
     stream the watermark bounds disorder instead.
 
-    The replay runs in ``_replay_session(spark)`` with its state store
-    sized to ``_STATE_PARTITIONS``; each replay has a fresh checkpoint, so
+    The replay runs in the caller's ``"replay"`` ``child_session`` with its
+    state store sized to ``_STATE_PARTITIONS``; each replay has a fresh checkpoint, so
     the pinned count never conflicts with prior state.  The returned frame
     belongs to that child session and runs at the caller's shuffle width;
     the memory sink's temp view is dropped once the frame is bound."""
     parent = points_df.sparkSession
-    child = _replay_session(parent)
+    child = child_session(parent, "replay")
     name = f"stream_gate_{uuid.uuid4().hex[:12]}"
     tmp = tempfile.mkdtemp(prefix=name)
     try:

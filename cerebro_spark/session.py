@@ -34,12 +34,21 @@ local-mode driver JVM itself.  A session whose JVM was started some other
 way (spark-submit, an existing context, a cluster) is left as it is: there
 the class would not be on the classpath, and every ``file://`` access would
 fail.
+
+``spark.python.sql.dataFrameDebugging.enabled`` is false: otherwise every
+``functions.*``/``Column`` call captures its Python call site for the JVM,
+about four py4j round trips per call (starting perfbench's ingest query took
+610 py4j calls with it, 342 without).  DataFrame-API error messages lose the
+Python call-site fragment; ``extra_conf`` can set it back to true (PySpark
+reads it once per process, at the first DataFrame-API call).
 """
 
 from __future__ import annotations
 
 import os
 import re
+import threading
+import weakref
 from importlib import resources
 
 from pyspark import SparkContext
@@ -137,6 +146,8 @@ def get_spark(
         # timed operations of a seed-7 run at 100, and 39 at 1000 (4-core
         # host).  1000 holds that vocabulary several times over.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # no Python call-site capture per DataFrame-API call (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master is None and not os.environ.get("SPARK_MASTER"):
         master = f"local[{cpus}]"
@@ -148,3 +159,35 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+# (parent, purpose) -> (child, parent conf digest of its last sync); entries
+# die with the parent, like ``io._RELATION_CACHE``
+_CHILD_SESSIONS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_CHILD_LOCK = threading.Lock()
+
+
+def child_session(
+    spark: SparkSession, purpose: str, conf: dict[str, str] | None = None
+) -> SparkSession:
+    """``spark``'s cached child for ``purpose`` (``newSession()``: its own SQL
+    conf, temp views and stream manager) with ``spark``'s runtime SQL conf
+    copied in and ``conf`` over it; ``spark``'s conf is never written.  The
+    copy (about 330 py4j calls) runs only when the parent's conf
+    digest (two calls) changed.  Users of one child share its conf, so they
+    run one at a time."""
+    conf = conf or {}
+    with _CHILD_LOCK:
+        children = _CHILD_SESSIONS.setdefault(spark, {})
+        digest = f"{spark.conf._jconf.getAll().toString()}{sorted(conf.items())}"
+        child, synced = children.get(purpose, (None, None))
+        if child is None:
+            child = spark.newSession()
+        if synced != digest:
+            mine = child.conf.getAll
+            wanted = {**spark.conf.getAll, **conf}
+            for key, value in wanted.items():
+                if mine.get(key) != value and (key in conf or child.conf.isModifiable(key)):
+                    child.conf.set(key, value)
+            children[purpose] = (child, digest)
+        return child

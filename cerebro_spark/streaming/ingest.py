@@ -12,11 +12,10 @@ cadence maps to per-query ``trigger(processingTime=...)``.
 
 from __future__ import annotations
 
-import datetime as dt
 from functools import reduce
 from itertools import chain
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cerebro_spark.schema import POINT_SCHEMA
@@ -44,6 +43,20 @@ def union_sources(sources: list[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), sources)
 
 
+def batch_now(clock_offset_ms: float = 0.0) -> Column:
+    """The micro-batch's time plus ``clock_offset_ms``, kept out of generated
+    code.  Streaming turns ``current_timestamp()`` into each batch's time as
+    a literal, which whole-stage codegen inlines into its source: each batch
+    compiled new classes (2 per ingest drain) into the shared codegen cache.
+    Inside an interpreted (``CodegenFallback``) one-element ``aggregate``
+    the literal stays in the expression object.  SQL text costs one py4j
+    call; the DataFrame-API lambda cost about 40."""
+    now = "current_timestamp()"
+    if clock_offset_ms:
+        now = f"timestamp_micros(unix_micros({now}) + {int(clock_offset_ms * 1000)})"
+    return F.expr(f"aggregate(array(0), {now}, (acc, x) -> acc)")
+
+
 def enrich_points(
     df: DataFrame,
     instance_tags: dict[str, str] | None = None,
@@ -59,13 +72,10 @@ def enrich_points(
       collision, matching dict.update order in the reference where point tags
       are updated *into* the instance tags);
     - default the bucket (reference `observer.py:122-124`).
+
+    The stamp is ``batch_now``, so a steady-state batch compiles nothing.
     """
-    now = F.current_timestamp()
-    if clock_offset_ms:
-        now = F.timestamp_micros(
-            (F.unix_micros(now) + int(clock_offset_ms * 1000)).cast("long")
-        )
-    out = df.withColumn("time", F.coalesce(F.col("time"), now))
+    out = df.withColumn("time", F.coalesce(F.col("time"), batch_now(clock_offset_ms)))
     if instance_tags:
         lit_map = F.create_map(
             *chain.from_iterable(
@@ -99,13 +109,13 @@ def stale_filter_stream(
 ) -> DataFrame:
     """T7 — streaming stale-data drop (reference `lvm.py:79-82`): watermark
     bounds state; the filter drops points older than ``max_age_seconds``
-    relative to processing time."""
+    relative to the batch time (``batch_now``)."""
     out = df
     if use_watermark:
         out = out.withWatermark(time_col, f"{int(max_age_seconds)} seconds")
     return out.filter(
         F.col(time_col).cast("double")
-        > F.current_timestamp().cast("double") - F.lit(max_age_seconds)
+        > batch_now().cast("double") - F.lit(max_age_seconds)
     )
 
 

@@ -200,8 +200,11 @@ def test_localfs_conf_only_for_a_jvm_launched_here(monkeypatch):
 
 def test_session_not_launched_by_get_spark_is_untouched(tmp_path):
     """A driver JVM started without the jar (here by a bare builder, as by
-    spark-submit) keeps Hadoop's file system after ``get_spark``, and its
-    ``file://`` reads and writes still work."""
+    spark-submit) keeps its own file system after ``get_spark``, and its
+    ``file://`` reads and writes still work.  That file system is hive-exec's
+    ``ProxyLocalFileSystem`` (its service file registers scheme ``file``
+    after Hadoop's), whose ``rename`` onto an existing file returns false
+    (DEPLOYMENT.md)."""
     script = textwrap.dedent(
         """
         import sys
@@ -217,6 +220,9 @@ def test_session_not_launched_by_get_spark_is_untouched(tmp_path):
               conf.get("spark.hadoop.fs.AbstractFileSystem.file.impl"),
               hconf.get("fs.file.impl"),
               hconf.get("fs.AbstractFileSystem.file.impl"))
+        jvm = spark._jvm
+        print(jvm.org.apache.hadoop.fs.FileSystem.get(
+            jvm.java.net.URI("file:///"), hconf).getClass().getName())
         spark.range(5).write.parquet(sys.argv[1])
         print(spark.read.parquet(sys.argv[1]).count())
         spark.stop()
@@ -229,9 +235,11 @@ def test_session_not_launched_by_get_spark_is_untouched(tmp_path):
         capture_output=True, text=True, env=env, timeout=300,
     )
     assert res.returncode == 0, res.stderr[-2000:]
-    keys, count = res.stdout.strip().splitlines()[-2:]
+    keys, fs_class, count = res.stdout.strip().splitlines()[-3:]
     assert "cerebro" not in keys
     assert keys.split()[:3] == ["None", "None", "None"]
+    print("file:// file system without the shim:", fs_class)
+    assert fs_class != "cerebro.fs.NioLocalFileSystem"
     assert count == "5"
 
 

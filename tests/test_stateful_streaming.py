@@ -398,10 +398,8 @@ def test_streaming_gate_state_store_width_and_parent_conf_untouched(
     from pyspark.sql.streaming import StreamingQueryListener
 
     from cerebro_spark.io import load_table
-    from cerebro_spark.queries.streaming_q import (
-        _replay_session,
-        q_streaming_ohlc_6h,
-    )
+    from cerebro_spark.queries.streaming_q import q_streaming_ohlc_6h
+    from cerebro_spark.session import child_session
 
     widths: list = []
 
@@ -424,7 +422,7 @@ def test_streaming_gate_state_store_width_and_parent_conf_untouched(
     saved = spark.conf.get(key)
     spark.conf.set(key, "3")
     load_table(spark, "events", sf_dir)  # its first load sets the read confs
-    child = _replay_session(spark)
+    child = child_session(spark, "replay")
     listener = Widths()
     child.streams.addListener(listener)
     writes: list = []
@@ -448,13 +446,11 @@ def test_streaming_gates_leave_no_temp_view(spark, sf_dir):
     """A gate replay's memory-sink view is dropped once its frame is bound:
     no ``stream_gate_*`` view stays in the caller's session or the replay
     child, and the returned frames still collect."""
-    from cerebro_spark.queries.streaming_q import (
-        _replay_session,
-        q_streaming_ohlc_6h,
-    )
+    from cerebro_spark.queries.streaming_q import q_streaming_ohlc_6h
+    from cerebro_spark.session import child_session
 
     outs = [q_streaming_ohlc_6h(spark, sf_dir) for _ in range(2)]
-    for session in (spark, _replay_session(spark)):
+    for session in (spark, child_session(spark, "replay")):
         views = [t.name for t in session.catalog.listTables()]
         assert not [v for v in views if v.startswith("stream_gate_")]
     assert outs[0].count() == outs[1].count() > 0

@@ -364,3 +364,140 @@ def test_ingest_observed_quality_metrics(spark, tmp_path):
     assert obs["rows"] == pts.count()
     assert obs["null_time_rows"] >= 1
     assert obs["empty_field_rows"] >= 1
+
+
+def _compiles(spark):
+    """Janino compiles so far in this JVM (``CodegenMetrics``)."""
+    return (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+        .getCount()
+    )
+
+
+def _drain(spark, config, store, ckpt):
+    runner = IngestRunner(spark, config, store_path=store, checkpoint_root=ckpt)
+    runner.start()
+    runner.await_all(120)
+    runner.stop()
+
+
+def test_steady_state_ingest_drain_compiles_nothing(spark, tmp_path):
+    """The batch timestamp stays out of generated code: after two warm
+    drains of one config into fresh stores, a third compiles no class (with
+    the stamp inlined as a literal, every drain compiled 2)."""
+    src = str(tmp_path / "in")
+    _mkpoints(spark, 20).write.parquet(src)
+    config = {"tags": {"observatory": "lco"}, "sources": {"s": {"type": "file_replay", "path": src}}}
+    for i in range(2):
+        _drain(spark, config, str(tmp_path / f"warm{i}"), str(tmp_path / f"wck{i}"))
+    before = _compiles(spark)
+    _drain(spark, config, str(tmp_path / "store"), str(tmp_path / "ck"))
+    assert _compiles(spark) == before
+    rows = spark.read.parquet(str(tmp_path / "store")).collect()
+    assert len(rows) == 21 and all(r["time"] is not None for r in rows)
+
+
+def test_enrich_points_stamps_batch_time_plus_offset(spark):
+    """``clock_offset_ms`` shifts the stamp of null times only."""
+    day_ms = 86_400_000
+    t0 = dt.datetime.now(dt.timezone.utc)
+    out = enrich_points(_mkpoints(spark, 2), clock_offset_ms=day_ms).collect()
+    t1 = dt.datetime.now(dt.timezone.utc)
+    stamped = [r["time"].astimezone(dt.timezone.utc) for r in out if r["fields"] == {"value": -1.0}]
+    lo, hi = t0 + dt.timedelta(days=1, seconds=-5), t1 + dt.timedelta(days=1, seconds=5)
+    assert len(stamped) == 1 and lo <= stamped[0] <= hi
+    assert sorted(r["time"] for r in out if r["fields"] != {"value": -1.0})[0] == dt.datetime(2024, 1, 1)
+
+
+def test_stale_filter_stream_drops_old_rows_and_compiles_once(spark, tmp_path):
+    """T7: a three-batch stream keeps the points younger than
+    ``max_age_seconds`` and drops the old ones; a second drain of the same
+    shape compiles nothing, because the batch time is not in the source."""
+    from cerebro_spark.streaming.ingest import stale_filter_stream
+
+    src = str(tmp_path / "in")
+    now = dt.datetime.now(dt.timezone.utc)
+    for i in range(3):
+        rows = [
+            ("m", {}, {"value": float(i)}, None, None, now - dt.timedelta(minutes=5), "b"),
+            ("m", {}, {"value": float(i)}, None, None, dt.datetime(2020, 1, 1, tzinfo=dt.timezone.utc), "b"),
+        ]
+        spark.createDataFrame(rows, POINT_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+
+    def drain(k):
+        q = (
+            stale_filter_stream(replay_file_stream(spark, src, max_files_per_trigger=1), 3600)
+            .writeStream.format("parquet")
+            .option("path", str(tmp_path / f"out{k}"))
+            .option("checkpointLocation", str(tmp_path / f"ck{k}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert len(q.recentProgress) >= 3
+        return spark.read.parquet(str(tmp_path / f"out{k}")).collect()
+
+    first = drain(0)
+    before = _compiles(spark)
+    second = drain(1)
+    assert _compiles(spark) == before
+    for out in (first, second):
+        assert sorted(r["fields"]["value"] for r in out) == [0.0, 1.0, 2.0]
+        assert all(r["time"].year > 2020 for r in out)
+
+
+def _land_points(path, n, t0, seed):
+    """One parquet file (one row group) of ``n`` one-minute points with
+    eight random fields each, so the file's size follows ``n``."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(seed)
+    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    table = pa.table(
+        {
+            "measurement": pa.array(["m"] * n),
+            "tags": pa.array([[("k", "a")]] * n, pa.map_(pa.string(), pa.string())),
+            "fields": pa.array(
+                [[(f"f{j}", rng.random()) for j in range(8)] for _ in range(n)],
+                pa.map_(pa.string(), pa.float64()),
+            ),
+            "fields_str": pa.array([None] * n, pa.map_(pa.string(), pa.string())),
+            "fields_bool": pa.array([None] * n, pa.map_(pa.string(), pa.bool_())),
+            "time": pa.array(
+                [base + dt.timedelta(seconds=t0 + i) for i in range(n)], pa.timestamp("us", tz="UTC")
+            ),
+            "bucket": pa.array(["b"] * n),
+        }
+    )
+    pq.write_table(table, path)
+    return os.path.getsize(path)
+
+
+def test_ingest_packs_a_big_landed_file_apart_from_small_ones(spark, tmp_path):
+    """A landing directory of one big file (larger than the other twenty
+    combined) and twenty small ones: the largest write task writes at most
+    the big file's rows plus one small file's.  Packed at Spark's 4 MiB open
+    cost, the big file shared its task with 9 small files at 2 cores and 4
+    at 4."""
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("one core runs every file in one task")
+    land = tmp_path / "landing"
+    land.mkdir()
+    big_rows, small_rows = 20_000, 250
+    big = _land_points(str(land / "part-00000.parquet"), big_rows, 0, 0)
+    small = sum(
+        _land_points(str(land / f"part-{i:05d}.parquet"), small_rows, big_rows + i * small_rows, i)
+        for i in range(1, 21)
+    )
+    assert big > small
+    store = str(tmp_path / "store")
+    _drain(spark, {"sources": {"s": {"type": "file_replay", "path": str(land)}}}, store, str(tmp_path / "ck"))
+    # one bucket and one date: each write task wrote one file
+    per_task = [
+        r["count"] for r in spark.read.parquet(store).groupBy(F.input_file_name()).count().collect()
+    ]
+    assert sum(per_task) == big_rows + 20 * small_rows
+    assert max(per_task) <= big_rows + small_rows
